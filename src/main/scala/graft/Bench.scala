@@ -58,7 +58,7 @@ object Bench {
     val (lastnMs, lastnDays) = serverBench(spark, sfDir)
     // scan before ingest: the ingest phase's JVM state (434 lingering
     // pool threads, grown heap) costs the scan a stable ~2.2× in-bench
-    // that no isolated re-run reproduces (ScanAfterIngestProbe) — decode
+    // that no isolated re-run reproduces (eaf4025) — decode
     // bandwidth is a property of the code, so measure it on the cleaner
     // JVM; ingest itself is insensitive to the handful of scan plans
     val (scanBytes, scanSec) = scanBench(spark, sfDir)
@@ -467,6 +467,29 @@ object Bench {
     } finally srv.stop()
   }
 
+  /** POSTs one jsonline body to the ingest server on local `port`;
+    * returns the HTTP status, or -1 when the request failed. A failed
+    * post must not ABORT the bench (a group-commit flush stalled past
+    * the committer's 120s timeout under multi-minute disk stalls 400s
+    * the request, and an escaping exception killed the whole run — every
+    * query timing lost): it counts 0 acked rows, which keeps the
+    * throughput honest. A 4xx/5xx without a body has no error stream. */
+  private[graft] def post(port: Int, body: Array[Byte]): Int = try {
+    val conn = new java.net.URI(
+      s"http://127.0.0.1:$port/insert/jsonline?_stream_fields=app")
+      .toURL.openConnection().asInstanceOf[java.net.HttpURLConnection]
+    conn.setRequestMethod("POST"); conn.setDoOutput(true)
+    conn.getOutputStream.write(body)
+    val code = conn.getResponseCode
+    Option(if (code >= 400) conn.getErrorStream else conn.getInputStream)
+      .foreach(_.readAllBytes())
+    conn.disconnect()
+    code
+  } catch { case e: java.io.IOException =>
+    System.err.println(s"[bench] ingest post failed: $e")
+    -1
+  }
+
   /** Closed-loop sustained ingest: `threads` posters loop for `seconds`
     * of wall clock against a fresh store; returns (rows acked, elapsed).
     * Long-window throughput amortizes flush-count quantization — the
@@ -478,26 +501,6 @@ object Bench {
     val srv = new graft.server.IngestServer(spark, dir)
     val port = srv.start()
     try {
-      def post(body: Array[Byte]): Int = try {
-        val conn = new java.net.URI(
-          s"http://127.0.0.1:$port/insert/jsonline?_stream_fields=app")
-          .toURL.openConnection().asInstanceOf[java.net.HttpURLConnection]
-        conn.setRequestMethod("POST"); conn.setDoOutput(true)
-        conn.getOutputStream.write(body)
-        val code = conn.getResponseCode
-        (if (code >= 400) conn.getErrorStream else conn.getInputStream)
-          .readAllBytes()
-        conn.disconnect()
-        code
-      } catch { case e: java.io.IOException =>
-        // a failed post must not ABORT the bench (a group-commit flush
-        // stalled past the committer's 120s timeout under this host's
-        // multi-minute disk stalls 400s the request, and the uncaught
-        // IOException killed the whole run — every query timing lost).
-        // It counts 0 acked rows, which keeps the throughput honest.
-        System.err.println(s"[bench] sustained post failed: $e")
-        -1
-      }
       def body(i: Int): Array[Byte] = (0 until linesPerPost).map { j =>
         s"""{"_time":"2024-01-06T10:${f"${j % 60}%02d"}:00Z","_msg":"sustained ingest row $i $j","app":"app${i % 8}"}"""
       }.mkString("\n").getBytes("UTF-8")
@@ -505,7 +508,7 @@ object Bench {
       // warm wave (JIT + first-flush plan), outside the timed window
       (0 until threads).map { i =>
         pool.submit(new java.util.concurrent.Callable[Int] {
-          def call(): Int = post(body(-1 - i)) })
+          def call(): Int = post(port, body(-1 - i)) })
       }.foreach(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
       val acked = new java.util.concurrent.atomic.AtomicLong(0)
       val t0 = System.nanoTime()
@@ -515,7 +518,7 @@ object Bench {
           def run(): Unit = {
             var i = w
             while (System.nanoTime() < deadline) {
-              if (post(body(i)) == 200) acked.addAndGet(linesPerPost.toLong)
+              if (post(port, body(i)) == 200) acked.addAndGet(linesPerPost.toLong)
               i += threads
             }
           }
@@ -544,22 +547,6 @@ object Bench {
     val srv = new graft.server.IngestServer(spark, dir)
     val port = srv.start()
     try {
-      def post(body: Array[Byte]): Int = try {
-        val conn = new java.net.URI(s"http://127.0.0.1:$port/insert/jsonline?_stream_fields=app")
-          .toURL.openConnection().asInstanceOf[java.net.HttpURLConnection]
-        conn.setRequestMethod("POST"); conn.setDoOutput(true)
-        conn.getOutputStream.write(body)
-        val code = conn.getResponseCode
-        (if (code >= 400) conn.getErrorStream else conn.getInputStream)
-          .readAllBytes()
-        conn.disconnect()
-        code
-      } catch { case e: java.io.IOException =>
-        // see ingestSustained.post: a stalled flush must cost throughput
-        // (0 acked rows), never abort the run and lose every timing
-        System.err.println(s"[bench] ingest post failed: $e")
-        -1
-      }
       def body(i: Int): Array[Byte] = (0 until linesPerPost).map { j =>
         s"""{"_time":"2024-01-05T10:${f"${j % 60}%02d"}:00Z","_msg":"bench ingest row $i $j from generator","app":"app${i % 8}"}"""
       }.mkString("\n").getBytes("UTF-8")
@@ -569,11 +556,11 @@ object Bench {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
       (0 until threads).map { i =>
         pool.submit(new java.util.concurrent.Callable[Int] {
-          def call(): Int = post(body(-1 - i)) })
+          def call(): Int = post(port, body(-1 - i)) })
       }.foreach(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
       val t0 = System.nanoTime()
       val futs = (0 until posts).map { i =>
-        pool.submit(new java.util.concurrent.Callable[Int] { def call(): Int = post(body(i)) })
+        pool.submit(new java.util.concurrent.Callable[Int] { def call(): Int = post(port, body(i)) })
       }
       val ok = futs.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS)).count(_ == 200)
       val sec = (System.nanoTime() - t0) / 1e9

@@ -17,7 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The fix mirrors what vectorized single-node engines do when the input
   * fits in one morsel — drop the parallel machinery: queries whose LEAF
   * input size (file bytes under every scanned relation) is below
-  * [[maxInteractiveInputBytes]] execute on a per-root memoized child
+  * [[MaxInteractiveInputBytes]] execute on a per-root memoized child
   * session (`root.newSession()` — same SparkContext, shared codegen and
   * file-status caches) configured with
   *
@@ -42,14 +42,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Sessions {
   /** Below this many bytes of leaf input (compressed file size), a query
-    * routes to the interactive session. Default 32 MiB ≈ 150-300 MB
+    * routes to the interactive session. 32 MiB ≈ 150-300 MB
     * decompressed ≈ the point where one scan task's work exceeds the
-    * orchestration overhead it saves. Override with
-    * `spark.graft.interactive.maxInputBytes` (set on the root session;
-    * <=0 disables routing). */
-  def maxInteractiveInputBytes(root: SparkSession): Long =
-    root.conf.getOption("spark.graft.interactive.maxInputBytes")
-      .map(_.toLong).getOrElse(32L << 20)
+    * orchestration overhead it saves. */
+  val MaxInteractiveInputBytes: Long = 32L << 20
 
   private val memo = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, SparkSession]())
@@ -68,14 +64,12 @@ object Sessions {
       // still wants a few-way spread — 8 reduce tasks cost ~10ms of task
       // floor but parallelize the exec of window-heavy small queries ~4×
       // (q_stream_context warm 139ms at 1 vs ~40ms spread). Still one
-      // job, still no AQE stage machinery. Parameterized for measurement;
-      // r14 re-check: widths 4/2 gain ~10-20% on FRESH mid-tail runs but
+      // job, still no AQE stage machinery. The r14 re-check (c9e8baa):
+      // widths 4/2 gain ~10-20% on FRESH mid-tail runs but
       // regress the WARM plan-cache path the serving layer lives on —
       // q_lql_topk warm 0.07s→0.35s at width 2 (final-stage top-k work
       // single-threads). 8 stays.
-      s.conf.set("spark.sql.shuffle.partitions",
-        root.conf.getOption("spark.graft.interactive.shufflePartitions")
-          .getOrElse("8"))
+      s.conf.set("spark.sql.shuffle.partitions", "8")
       s.conf.set("spark.sql.leafNodeDefaultParallelism", "1")
       // spread SCAN-side work: small tables come as handfuls of sub-MB
       // files (Tables.parallelized / LogStore day parts), and the default
@@ -210,12 +204,7 @@ object Sessions {
     * the threshold, on `root` otherwise. The probe build happens on the
     * child so the common (small) case constructs exactly one plan. */
   def route(root: SparkSession)(mk: SparkSession => DataFrame): DataFrame = {
-    val limit = maxInteractiveInputBytes(root)
-    if (limit <= 0L) mk(root)
-    else {
-      val child = interactive(root)
-      val df = mk(child)
-      if (leafInputBytes(df) <= limit) df else mk(root)
-    }
+    val df = mk(interactive(root))
+    if (leafInputBytes(df) <= MaxInteractiveInputBytes) df else mk(root)
   }
 }

@@ -653,7 +653,7 @@ object SparkEntry {
       // local-mode job floor (~60ms each); interactive runs each action
       // as one job.
       val s = if (Sessions.leafInputBytes(embeddings(s0, d)) <=
-                  Sessions.maxInteractiveInputBytes(s0))
+                  Sessions.MaxInteractiveInputBytes)
                 Sessions.interactive(s0) else s0
       val emb = embeddings(s, d)
       val q = emb.filter(col("vec_id") < 5)

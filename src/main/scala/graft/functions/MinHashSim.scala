@@ -114,7 +114,7 @@ object MinHashSim {
         // direct XXH64 statics, not XxHash64Function.hash: the generic
         // entry pattern-matches on (value, dataType) PER CALL — in the
         // inner loop that dispatch ran numHashes times per token and
-        // dominated the kernel (KernelBench15). The statics are exactly
+        // dominated the kernel (c78dfce). The statics are exactly
         // what codegen'd xxhash64 emits, so values are bit-identical
         // (pinned by the ExprPropertySpec differential tests).
         val h1 = XXH64.hashUnsafeBytes(

@@ -125,7 +125,7 @@ case class CharWindowHashesExpr(child: Expression, k: Int)
   * array<struct<h,reps>>: char windows are mostly unique, so a struct
   * row per entry allocated ~n objects per document — the map form is
   * two flat long buffers regardless of entry count (measured 2-4× on
-  * the kernel microbench, tools/WindowKernelBench).
+  * the kernel microbench, fe09239).
   * `chars`=true rolls code-point windows, false rolls token windows. */
 case class WindowHashCountsExpr(child: Expression, k: Int, chars: Boolean)
     extends UnaryExpression {
@@ -291,7 +291,7 @@ object Shingles {
     while (k < count) {
       val hi = math.min(k + n, m)
       if (hi <= k) seen.add(UTF8String.EMPTY_UTF8)
-      else if (hi - k == 1)
+      else if (hi - k == 1) // a view: see tokensEval's validity contract
         seen.add(UTF8String.fromAddress(base, off + starts(k),
           ends(k) - starts(k)))
       else {
@@ -364,10 +364,17 @@ object Shingles {
     new GenericArrayData(out)
   }
 
+  /** Tokens in one pass over the UTF-8 bytes, each a zero-copy
+    * `UTF8String.fromAddress` view into `text`'s buffer (one-token
+    * shingles from [[shinglesEval]] are views too). Spark builtins do not
+    * do this — `UTF8String.substring` copies — so the contract is this
+    * kernel's own: a view is valid only until the next input row, whose
+    * bytes may overwrite the same buffer. A consumer that keeps the
+    * array or its strings past the current row must copy them; Spark's
+    * buffering operators (aggregation buffers, sorts, collect) do —
+    * pinned by the retaining-consumer cases in Utf8ByteKernelSpec and
+    * ExprPropertySpec. */
   def tokensEval(text: UTF8String): GenericArrayData = {
-    // one pass over the UTF-8 bytes; tokens are zero-copy views into the
-    // input buffer (the UTF8String.substring pattern — operators that
-    // buffer rows copy string payloads into their own memory)
     val nb = text.numBytes()
     val base = text.getBaseObject
     val off = text.getBaseOffset

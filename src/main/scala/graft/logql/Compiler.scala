@@ -1346,7 +1346,7 @@ object Compiler {
     //   - interactive path: one per-stream window — a single exchange,
     //     cheapest at small scale;
     //   - parallel path: a per-stream window serializes a HOT stream
-    //     onto one task (SkewProbe: 50%-stream ⇒ 12.9× max/median task
+    //     onto one task (4b3d22b: 50%-stream ⇒ 12.9× max/median task
     //     time), so compute exact per-stream row numbers with two-level
     //     numbering (time-bucket local ranks + tiny per-bucket offset
     //     rollup), then window inside fixed-size ROW-NUMBER buckets with
@@ -1389,7 +1389,7 @@ object Compiler {
         // volume is ≤ 2N per (stream, bucket): the hot stream spreads by
         // bucket in the shared pass and is bounded by bucket COUNT (not
         // row count) in the edge pass — no stage serializes on a 50%
-        // stream (SkewProbe gate). Both union branches carry identical
+        // stream (the skew check at 4b3d22b). Both union branches carry identical
         // columns, so the (sid, bucket) exchange is reused, not rescanned.
         val isEdge = col("__lnd") <= n || col("__ln") <= n
         val interior = p1.filter(!isEdge)
@@ -1533,7 +1533,7 @@ object Compiler {
     * TakeOrderedAndProject's heap, WindowExec's partition sort) evaluate
     * every non-leading SortOrder expression PER COMPARISON, not per row —
     * for the 3-tier collation above that is ~n·log n string→double parse
-    * attempts per task instead of n (SortExplainProbe: 440ms vs 47ms CPU
+    * attempts per task instead of n (54dc100: 440ms vs 47ms CPU
     * sorting 3000 rows; the r13 q_lql_uniq warm regression was this cost
     * landing in a 1-partition sort). Project each collation tier into a
     * temp column once, sort on the plain columns, and have the caller
@@ -1596,15 +1596,19 @@ object Compiler {
     map_filter(full, (_, v) => v.isNotNull && v =!= "")
   }
 
+  /** Plan-size estimate above which an interactive [[globalSort]] keeps
+    * the range sort instead of one single-partition task. */
+  private val SinglePartitionSortGateBytes = BigInt(256L << 20)
+
   /** Global sort. On the interactive session an unlimited `orderBy` is
     * replaced by a single-partition in-partition sort: the range
     * exchange's partition-bounds SAMPLING pass is a whole extra job per
     * execution — measured ~45ms on a 12-row input
-    * (tools/TinyCollectProbe), pure floor against sub-32MiB inputs.
+    * (fe09239), pure floor against sub-32MiB inputs.
     * The repartition(1) ALSO keeps warm re-execution fast: the extra
     * exchange makes everything upstream (scan, aggregation) a skipped
     * stage on a plan-cache re-collect, so only the tiny 1-task sort
-    * re-runs (SortPathProbe: 47ms CPU vs 213ms for coalesce(1), which
+    * re-runs (54dc100: 47ms CPU vs 213ms for coalesce(1), which
     * fuses the upstream agg into the re-run stage). Gated on estimated
     * plan size (ADVICE r13): an interactive-routed query can still
     * EXPLODE past its 32 MiB leaf input (unroll/unpack), and a single
@@ -1620,22 +1624,19 @@ object Compiler {
       import org.apache.spark.sql.catalyst.plans.{logical => lp}
       // all-local leaves (sidecar-served facets, dict rollups): coalesce
       // is a narrow dependency — no shuffle stage at all (~2ms vs ~18ms
-      // for the single-partition shuffle, TinyCollectProbe)
+      // for the single-partition shuffle, fe09239)
       val leaves = df.queryExecution.logical.collectLeaves()
       val allLocal = leaves.nonEmpty && leaves.forall(
         _.isInstanceOf[lp.LocalRelation])
       if (allLocal) df.coalesce(1).sortWithinPartitions(exprs: _*)
       else {
-        val gate = BigInt(df.sparkSession.conf
-          .get("spark.graft.sort.singlePartitionGateBytes",
-               (256L << 20).toString).toLong)
         // ANALYZED stats, not optimizedPlan: triggering the optimizer
         // here ran a full extra Catalyst pass per cold serving query
-        // (~+100ms on /select/logsql/hits, EndpointLatProbe r14); the
+        // (~+100ms on /select/logsql/hits, 779cdcc); the
         // size estimate only gates a pathological-explosion escape hatch
         // and the analyzed-plan fold is equally conservative for it
-        if (df.queryExecution.analyzed.stats.sizeInBytes > gate)
-          df.orderBy(exprs: _*)
+        if (df.queryExecution.analyzed.stats.sizeInBytes >
+              SinglePartitionSortGateBytes) df.orderBy(exprs: _*)
         else df.repartition(1).sortWithinPartitions(exprs: _*)
       }
     } else df.orderBy(exprs: _*)

@@ -543,7 +543,7 @@ object Dedup {
     * branch's copy of the rollup into a structurally different subtree —
     * with the forced dependence the join input and the aggregate input
     * are the identical exchange and ReuseExchange shuffles it once
-    * (caught by tools/SubstrProbe when this regressed). The predicate is
+    * (a regression of this was caught at 84b350e). The predicate is
     * always true (__reps >= 1 by construction, id never null), so the
     * semantics are exactly count(*). */
   private def spanRollup(df: DataFrame, textCol: String, idCol: String,

@@ -499,8 +499,7 @@ object Mpeg1 {
                   yPlane, cbPlane, crPlane, pc)
                 picOk = true
               } catch {
-                case e: Exception =>
-                  if (sys.props.contains("graft.mpeg1.debug")) e.printStackTrace()
+                case _: Exception =>
                   picOk = false; picType = 0
               }
             }
@@ -513,9 +512,7 @@ object Mpeg1 {
       if (frames.isEmpty || w <= 0 || h <= 0) None
       else Some(Mpeg1Video(frames.toIndexedSeq, usPerFrame))
     } catch {
-      case e: Exception =>
-        if (sys.props.contains("graft.mpeg1.debug")) e.printStackTrace()
-        None
+      case _: Exception => None
     }
   }
 

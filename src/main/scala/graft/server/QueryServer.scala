@@ -718,7 +718,7 @@ final class QueryServer(spark: SparkSession, sourceProvider: () => DataFrame,
     // fully-materialized endpoint (like hits): every Grafana panel
     // refresh re-issues the same query/start/end/step — memoize the
     // rendered body under the generation-keyed plan cache (measured
-    // 280ms → ~2ms warm on the 20M store, EndpointLatProbe)
+    // 280ms → ~2ms warm on the 20M store, a77f8f3)
     withPlanCache("stats_query_range", ex, ps) {
       PlanCacheEntry(None, None, Some(statsQueryRangeBody(ex, ps)))
     } { entry => respond(ex, 200, entry.body.get) }

@@ -374,11 +374,6 @@ object FieldBloom {
     * intersection bloom (no file could have been pruned). */
   val unprunableSkips = new java.util.concurrent.atomic.AtomicLong
 
-  private def MaxCachedManifestBytes: Long =
-    sys.props.get("graft.bloom.manifestCap")
-      .orElse(sys.env.get("GRAFT_BLOOM_MANIFEST_CAP"))
-      .map(_.toLong).getOrElse(64L << 20)
-
   /** Per-field INTERSECTION of every file's bitmap (None when the
     * field's bitmaps mix sizes — sentinel rows, rebuilds): a token
     * present in the intersection is present in EVERY file's bloom, so
@@ -405,7 +400,7 @@ object FieldBloom {
 
   private def cachedBitmaps(spark: SparkSession, dir: String,
                             sig: (Long, Long)): Option[CachedSidecar] = {
-    if (sig._1 > MaxCachedManifestBytes) return None
+    if (sig._1 > MsgBloom.MaxCachedManifestBytes) return None
     Option(manifestCache.get(dir)) match {
       case Some((s, m)) if s == sig => Some(m)
       case _ =>

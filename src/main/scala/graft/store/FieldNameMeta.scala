@@ -324,9 +324,6 @@ object FieldNameMeta {
 
   def facetsAssist(df: DataFrame, maxPerField: Long,
                    maxValueLen: Long): Option[FacetsAssist] = {
-    if (df.sparkSession.conf
-          .getOption("spark.graft.facets.assist").contains("false"))
-      return None
     val (_, admitted, counts) = admittedCoveredParts(df).getOrElse(return None)
     if (admitted.isEmpty) return None
     val perField = scala.collection.mutable

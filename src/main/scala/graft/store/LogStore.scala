@@ -41,7 +41,7 @@ object LogStore {
     * stream-filter pruning, but parquet only splits at row-group
     * boundaries, so a HOT stream's file must not be one monolithic
     * group: with the 128 MiB default a stream holding 50% of a day
-    * scanned as ONE task (SkewProbe: max/median task ratio 10-42×).
+    * scanned as ONE task (max/median task ratio 10-42×, 4b3d22b).
     * 8 MiB groups keep such files splittable (a 32-way executor saturates
     * on any file > ~256 MiB) at a negligible compression cost. */
   val ParquetRowGroupBytes: Long = 8L << 20
@@ -513,7 +513,7 @@ object LogStore {
     * pruning layer under the file-level token sidecars: with the exact/
     * in/prefix filters compiling to bare-column PushedFilters, the
     * parquet reader skips row groups whose bloom rejects the needle
-    * (RowGroupBloomProbe: 2.9× on a needle-in-one-row-group scan; the
+    * (2.9× on a needle-in-one-row-group scan, 3d3968b; the
     * reference's analogue is its per-8M-row-block bloom,
     * block_header.go:584-615). Sorted columns (_stream_id) and _msg
     * (token sidecar's job, not equality-probed) are excluded; min/max

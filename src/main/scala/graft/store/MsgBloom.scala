@@ -228,10 +228,7 @@ object MsgBloom {
     * disk); a 100 TB store's ~100k-file sidecar (~12 GiB of bitmaps)
     * keeps the distributed probe. Keyed by the sidecar files' summed
     * length + max mtime, so refresh/prune swaps invalidate naturally. */
-  private def MaxCachedManifestBytes: Long =
-    sys.props.get("graft.bloom.manifestCap")
-      .orElse(sys.env.get("GRAFT_BLOOM_MANIFEST_CAP"))
-      .map(_.toLong).getOrElse(64L << 20)
+  private[store] val MaxCachedManifestBytes: Long = 64L << 20
   private val manifestCache = new java.util.concurrent.ConcurrentHashMap[
     String, ((Long, Long), Array[(String, Array[Byte])])]()
 

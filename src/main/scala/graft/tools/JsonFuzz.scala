@@ -61,8 +61,8 @@ object JsonFuzz {
       val d = doc()
       val p = paths(i % paths.length)
       val segs = p.split("\\.", -1)
-      val fast = JsonFuzzSupport.kernelOrFallback(d, segs, p)
-      val want = JsonFuzzSupport.jackson(d, p)
+      val fast = kernelOrFallback(d, segs, p)
+      val want = jackson(d, p)
       if (fast != want) {
         bad += 1
         if (bad <= 10)
@@ -72,16 +72,14 @@ object JsonFuzz {
     }
     println(s"$iters docs, $bad mismatches")
   }
-}
 
-object JsonFuzzSupport {
-  def jackson(doc: String, path: String): String = {
+  private def jackson(doc: String, path: String): String = {
     val r = GetJsonObject(Literal(UTF8String.fromString(doc)),
       Literal(UTF8String.fromString("$." + path))).eval(null)
     if (r == null) null else r.toString
   }
   /** Mirrors JsonGet.scalarOrJson's when/otherwise. */
-  def kernelOrFallback(doc: String, segs: Array[String], path: String): String = {
+  private def kernelOrFallback(doc: String, segs: Array[String], path: String): String = {
     val k = graft.functions.JsonGetKernel.get(UTF8String.fromString(doc), segs)
     if (k == null) null
     else if (k.toString == graft.functions.JsonGetKernel.NonScalarStr) jackson(doc, path)

@@ -3,16 +3,18 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** r15 A/B of the LSH bucket-build shape over the OpsScaleProbe 500k-doc
-  * corpus: TWO-PHASE (codegen'd count → semi-join → collect over the
-  * ≥2-member buckets only; the r12 shape, restored at this HEAD) vs
-  * ONE-PASS (a single groupBy with the CappedIds typed-imperative
-  * aggregate; the mid-r15 experiment). The one-pass saves one exchange of
-  * narrow (id, band_hash) rows but pushes EVERY band bucket — ~16M,
-  * almost all singletons on a deduplicated corpus — through
-  * ObjectHashAggregate, which falls back to sort-based aggregation at
-  * 128 hash-map groups and sorts the whole exploded table per partition.
-  * Both variants produce the identical candidate-pair set (asserted).
+/** A/B of the LSH bucket-build shape over the OpsScaleProbe 500k-doc
+  * corpus. ONE-PASS (a single groupBy with the CappedIds
+  * typed-imperative aggregate) is the shape `Dedup.minhashLSH` and
+  * `Dedup.simhashCandidates` ship; TWO-PHASE (codegen'd count →
+  * semi-join → collect over the ≥2-member buckets only, the r12 shape)
+  * is the alternative preserved here for the A/B. One-pass shuffles the
+  * exploded band table once instead of twice, at the price of pushing
+  * every band bucket — ~16M, almost all singletons on a deduplicated
+  * corpus — through ObjectHashAggregate, which falls back to sort-based
+  * aggregation past 128 hash-map groups. Measured r15 on RAM shuffle
+  * scratch: one-pass 2.30s vs two-phase 3.62-5.20s. Both variants
+  * produce the identical candidate-pair set (asserted).
   *
   * Usage: runMain graft.tools.MinhashShapeProbe [docsPath]
   */

@@ -770,4 +770,24 @@ class ExprPropertySpec extends SparkSuite {
       GenerateUnsafeProjection.generate(Seq(e))
     }
   }
+
+  test("collect_list retains tokens/shingles views across rows") {
+    import spark.implicits._
+    // the exchange hands rows to the kernels out of a reused row buffer,
+    // so a buffering consumer that kept the zero-copy views instead of
+    // copying them would report the last row's bytes for every row
+    val texts = Seq("alpha beta", "gamma zeta", "eta theta iota", "kappa")
+    val got = texts.toDF("text").repartition(1)
+      .select(col("text"), Shingles.tokens(col("text")).as("t"),
+        Shingles.shingles(col("text"), 1).as("s"))
+      .agg(collect_list(struct(col("text"), col("t"), col("s"))).as("rows"))
+      .head().getSeq[Row](0)
+      .map(r => (r.getString(0), r.getSeq[String](1), r.getSeq[String](2)))
+    assert(got.size == texts.size)
+    got.foreach { case (text, toks, shs) =>
+      val want = text.split(" ").toSeq
+      assert(toks == want, s"tokens of '$text'")
+      assert(shs == want, s"1-shingles of '$text'")
+    }
+  }
 }

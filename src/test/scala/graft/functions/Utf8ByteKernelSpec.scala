@@ -163,4 +163,22 @@ class Utf8ByteKernelSpec extends AnyFunSuite {
     assert(MinHashSim.simhash64Eval(withNulls) ==
       MinHashSim.simhash64Eval(noNulls))
   }
+
+  test("token views track the input buffer; a copied array keeps its row") {
+    // one reused row buffer, as Spark's row readers reuse theirs
+    val buf = "alpha beta".getBytes("UTF-8")
+    val row = UTF8String.fromBytes(buf)
+    val views = Shingles.tokensEval(row)
+    val oneTokenShingles = Shingles.shinglesEval(row, 1)
+    val kept = views.copy()
+    val keptShingles = oneTokenShingles.copy()
+    System.arraycopy("gamma zeta".getBytes("UTF-8"), 0, buf, 0, buf.length)
+    // the views now read the next row's bytes: valid only until then
+    assert(strings(views) == Seq("gamma", "zeta"))
+    assert(strings(oneTokenShingles) == Seq("gamma", "zeta"))
+    // a consumer that copied (GenericArrayData.copy, as buffering
+    // operators do) still holds the first row's values
+    assert(strings(kept) == Seq("alpha", "beta"))
+    assert(strings(keptShingles) == Seq("alpha", "beta"))
+  }
 }
