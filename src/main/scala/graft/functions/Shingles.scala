@@ -182,8 +182,12 @@ case class TokenWindowHashesExpr(child: Expression, k: Int)
 
 object Shingles {
 
-  /** `[\p{L}\p{N}_]` per Java regex Unicode categories. */
-  @inline private def isWordCp(cp: Int): Boolean = {
+  /** `[\p{L}\p{N}_]` per Java regex Unicode categories — the engine's one
+    * word class (lib/logstorage/tokenizer.go:12-60): every kernel here,
+    * TextStatsKernel, WordMatch, the contains-set tokenizer and the bloom
+    * prefix trim call it, so a token a filter needs is a token the bloom
+    * saw. NOT isLetterOrDigit, which misses \p{Nl}/\p{No} ('Ⅻ', '²'). */
+  @inline def isWordCp(cp: Int): Boolean = {
     if (cp < 128)
       (cp >= 'a' && cp <= 'z') || (cp >= 'A' && cp <= 'Z') ||
         (cp >= '0' && cp <= '9') || cp == '_'
@@ -195,55 +199,63 @@ object Shingles {
     }
   }
 
+  private final val Repl = 0xFFFD << 3
+
   /** Decode the code point whose first byte sits at byte index `i` of the
     * UTF8String addressed by (base, off, n). Returns `(cp << 3) | byteLen`
-    * (cp ≤ 0x10FFFF = 21 bits, so the pack fits an Int), or -1 when the
-    * sequence is malformed, overlong, a surrogate, or out of range —
-    * callers then fall back to the legacy `toString`-decoding path so
-    * replacement-character semantics stay bit-identical to
-    * `new String(bytes, UTF_8)` on every input.
+    * (cp ≤ 0x10FFFF = 21 bits, so the pack fits an Int). A malformed
+    * sequence decodes to U+FFFD over exactly the bytes `UTF8String.toString`
+    * (`new String(bytes, UTF_8)`) replaces, so one walk serves every input
+    * and yields the code points the String decode would:
+    *   - `80–C1` and `F5–FF` are one U+FFFD each;
+    *   - a `C2–DF` lead takes 1 continuation, `E0–EF` 2, `F0–F4` 3; the
+    *     first must be `A0–BF` after `E0`, `90–BF` after `F0`, `80–8F`
+    *     after `F4` and `80–BF` otherwise (`ED` included), later ones
+    *     `80–BF`; when continuation k is missing or out of range the
+    *     lead and the k−1 accepted continuations are one U+FFFD;
+    *   - a complete `ED A0–BF xx` (a surrogate) is one U+FFFD over its 3
+    *     bytes — the JDK decoder's rule, not Unicode's maximal subpart.
+    * Pinned exhaustively against `toString` by Utf8ByteKernelSpec.
     *
     * Why bytes at all: every per-row text kernel previously started with
     * `text.toString`, i.e. a full UTF-8 → UTF-16 decode plus a char[]
-    * allocation per row, before doing its single pass. Valid UTF-8 (the
-    * only thing parquet string columns ever hold) decodes straight off
-    * the UnsafeRow/ColumnVector bytes with zero allocation. */
-  @inline private def decodeCp(base: AnyRef, off: Long, i: Int, n: Int): Int = {
+    * allocation per row, before doing its single pass. Decoding straight
+    * off the UnsafeRow/ColumnVector bytes allocates nothing. */
+  @inline private[functions] def decodeCp(base: AnyRef, off: Long, i: Int,
+      n: Int): Int = {
     import org.apache.spark.unsafe.Platform
+    @inline def cont(j: Int): Int = // continuation byte at j, or -1
+      if (j >= n) -1
+      else {
+        val v = Platform.getByte(base, off + j) & 0xFF
+        if ((v & 0xC0) == 0x80) v else -1
+      }
     val v0 = Platform.getByte(base, off + i) & 0xFF
     if (v0 < 0x80) (v0 << 3) | 1
-    else if (v0 < 0xC2) -1 // bare continuation or overlong 2-byte lead
+    else if (v0 < 0xC2) Repl | 1 // bare continuation or overlong 2-byte lead
     else if (v0 < 0xE0) {
-      if (i + 1 >= n) return -1
-      val v1 = Platform.getByte(base, off + i + 1) & 0xFF
-      if ((v1 & 0xC0) != 0x80) return -1
-      ((((v0 & 0x1F) << 6) | (v1 & 0x3F)) << 3) | 2
+      val v1 = cont(i + 1)
+      if (v1 < 0) Repl | 1
+      else ((((v0 & 0x1F) << 6) | (v1 & 0x3F)) << 3) | 2
     } else if (v0 < 0xF0) {
-      if (i + 2 >= n) return -1
-      val v1 = Platform.getByte(base, off + i + 1) & 0xFF
-      val v2 = Platform.getByte(base, off + i + 2) & 0xFF
-      if ((v1 & 0xC0) != 0x80 || (v2 & 0xC0) != 0x80) return -1
+      val v1 = cont(i + 1)
+      if (v1 < 0 || (v0 == 0xE0 && v1 < 0xA0)) return Repl | 1
+      val v2 = cont(i + 2)
+      if (v2 < 0) return Repl | 2
       val cp = ((v0 & 0x0F) << 12) | ((v1 & 0x3F) << 6) | (v2 & 0x3F)
-      if (cp < 0x800 || (cp >= 0xD800 && cp <= 0xDFFF)) -1
-      else (cp << 3) | 3
+      if (cp >= 0xD800 && cp <= 0xDFFF) Repl | 3 else (cp << 3) | 3
     } else if (v0 < 0xF5) {
-      if (i + 3 >= n) return -1
-      val v1 = Platform.getByte(base, off + i + 1) & 0xFF
-      val v2 = Platform.getByte(base, off + i + 2) & 0xFF
-      val v3 = Platform.getByte(base, off + i + 3) & 0xFF
-      if ((v1 & 0xC0) != 0x80 || (v2 & 0xC0) != 0x80 || (v3 & 0xC0) != 0x80)
-        return -1
-      val cp = ((v0 & 0x07) << 18) | ((v1 & 0x3F) << 12) |
-        ((v2 & 0x3F) << 6) | (v3 & 0x3F)
-      if (cp < 0x10000 || cp > 0x10FFFF) -1
-      else (cp << 3) | 4
-    } else -1
+      val v1 = cont(i + 1)
+      if (v1 < 0 || (v0 == 0xF0 && v1 < 0x90) || (v0 == 0xF4 && v1 > 0x8F))
+        return Repl | 1
+      val v2 = cont(i + 2)
+      if (v2 < 0) return Repl | 2
+      val v3 = cont(i + 3)
+      if (v3 < 0) return Repl | 3
+      ((((v0 & 0x07) << 18) | ((v1 & 0x3F) << 12) | ((v2 & 0x3F) << 6) |
+        (v3 & 0x3F)) << 3) | 4
+    } else Repl | 1
   }
-
-  /** Package-shared accessor for the UTF-8 decoder (used by the other
-    * byte-direct kernels, e.g. TextStatsKernel). */
-  private[functions] def decodeCpShared(base: AnyRef, off: Long, i: Int,
-      n: Int): Int = decodeCp(base, off, i, n)
 
   def shinglesEval(text: UTF8String, n: Int): GenericArrayData = {
     // token [start, end) BYTE ranges in one pass over the UTF-8 bytes —
@@ -264,7 +276,6 @@ object Shingles {
       if (b >= 0) cp = b
       else {
         val d = decodeCp(base, off, i, nb)
-        if (d < 0) return shinglesEvalStr(text, n) // malformed: legacy path
         cp = d >>> 3; len = d & 7
       }
       val w = isWordCp(cp)
@@ -320,51 +331,11 @@ object Shingles {
     new GenericArrayData(out)
   }
 
-  /** Legacy String-decoding shingle pass — the fallback for inputs with
-    * invalid UTF-8, where `toString`'s U+FFFD replacement semantics must
-    * be reproduced exactly. */
-  private def shinglesEvalStr(text: UTF8String, n: Int): GenericArrayData = {
-    val s = text.toString
-    // token [start, end) offsets in one code-point scan
-    val starts = new java.util.ArrayList[Integer]()
-    val ends = new java.util.ArrayList[Integer]()
-    var i = 0
-    var runStart = -1
-    val len = s.length
-    while (i < len) {
-      val cp = s.codePointAt(i)
-      val w = isWordCp(cp)
-      if (w && runStart < 0) runStart = i
-      val step = Character.charCount(cp)
-      if (!w && runStart >= 0) { starts.add(runStart); ends.add(i); runStart = -1 }
-      i += step
-    }
-    if (runStart >= 0) { starts.add(runStart); ends.add(len) }
-    val m = starts.size()
-    val count = math.max(m - n, 0) + 1
-    val seen = new java.util.LinkedHashSet[String](count * 2)
-    val sb = new java.lang.StringBuilder(32)
-    var k = 0
-    while (k < count) {
-      sb.setLength(0)
-      var j = k
-      val hi = math.min(k + n, m)
-      while (j < hi) {
-        if (j > k) sb.append(' ')
-        sb.append(s, starts.get(j), ends.get(j))
-        j += 1
-      }
-      seen.add(sb.toString)
-      k += 1
-    }
-    val out = new Array[Any](seen.size())
-    var o = 0
-    val it = seen.iterator()
-    while (it.hasNext) { out(o) = UTF8String.fromString(it.next()); o += 1 }
-    new GenericArrayData(out)
-  }
-
-  /** Tokens in one pass over the UTF-8 bytes, each a zero-copy
+  /** Tokens in one pass over the UTF-8 bytes — the one walk for every
+    * input: a malformed sequence decodes to U+FFFD as `toString` would
+    * ([[decodeCp]]), and U+FFFD is not a word code point, so a token never
+    * holds replaced bytes and equals the token of the decoded String.
+    * Each token is a zero-copy
     * `UTF8String.fromAddress` view into `text`'s buffer (one-token
     * shingles from [[shinglesEval]] are views too). Spark builtins do not
     * do this — `UTF8String.substring` copies — so the contract is this
@@ -388,7 +359,6 @@ object Shingles {
       if (b >= 0) cp = b
       else {
         val d = decodeCp(base, off, i, nb)
-        if (d < 0) return tokensEvalStr(text) // malformed: legacy path
         cp = d >>> 3; len = d & 7
       }
       val w = isWordCp(cp)
@@ -401,27 +371,6 @@ object Shingles {
     }
     if (runStart >= 0)
       out.add(UTF8String.fromAddress(base, off + runStart, nb - runStart))
-    new GenericArrayData(out.toArray)
-  }
-
-  /** Legacy String-decoding tokenizer — invalid-UTF-8 fallback (U+FFFD
-    * replacement parity with `toString`). */
-  private def tokensEvalStr(text: UTF8String): GenericArrayData = {
-    val s = text.toString
-    val out = new java.util.ArrayList[Any]()
-    var i = 0
-    var runStart = -1
-    val len = s.length
-    while (i < len) {
-      val cp = s.codePointAt(i)
-      val w = isWordCp(cp)
-      if (w && runStart < 0) runStart = i
-      if (!w && runStart >= 0) {
-        out.add(UTF8String.fromString(s.substring(runStart, i))); runStart = -1
-      }
-      i += Character.charCount(cp)
-    }
-    if (runStart >= 0) out.add(UTF8String.fromString(s.substring(runStart, len)))
     new GenericArrayData(out.toArray)
   }
 
@@ -466,8 +415,7 @@ object Shingles {
     if (k <= 0) return Array.emptyLongArray
     // decode code points straight off the UTF-8 bytes (one pass, no
     // String materialization); cps can never outnumber bytes, so the
-    // buffer is sized once. Invalid UTF-8 falls back to the legacy
-    // String-decoding path for U+FFFD replacement parity.
+    // buffer is sized once
     val nb = text.numBytes()
     val base = text.getBaseObject
     val off = text.getBaseOffset
@@ -478,7 +426,6 @@ object Shingles {
       if (b >= 0) { cps(n) = b; n += 1; i += 1 }
       else {
         val d = decodeCp(base, off, i, nb)
-        if (d < 0) return charWindowHashesRawStr(text, k)
         cps(n) = d >>> 3; n += 1; i += d & 7
       }
     }
@@ -494,35 +441,6 @@ object Shingles {
     // hash a sparse small-coefficient polynomial in RollBase, where a
     // short lattice vector (a few positions with bounded char deltas) can
     // cancel mod 2^64; mixed symbols make any colliding pair structureless
-    while (j < n) {
-      h = h * RollBase + fmix64(cps(j).toLong)
-      if (j >= k) h -= bk * fmix64(cps(j - k).toLong)
-      if (j >= k - 1) out(j - k + 1) = h
-      j += 1
-    }
-    out
-  }
-
-  /** Legacy String-decoding char-window pass — invalid-UTF-8 fallback
-    * (U+FFFD replacement parity with `toString`). */
-  private def charWindowHashesRawStr(text: UTF8String, k: Int): Array[Long] = {
-    val s = text.toString
-    // code-point array (window positions are code points, not UTF-16 units)
-    val n = s.codePointCount(0, s.length)
-    if (n < k) return Array.emptyLongArray
-    val cps = new Array[Int](n)
-    var i = 0; var o = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      cps(o) = cp; o += 1
-      i += Character.charCount(cp)
-    }
-    var bk = 1L
-    var e = 0
-    while (e < k) { bk *= RollBase; e += 1 }
-    val out = new Array[Long](n - k + 1)
-    var h = 0L
-    var j = 0
     while (j < n) {
       h = h * RollBase + fmix64(cps(j).toLong)
       if (j >= k) h -= bk * fmix64(cps(j - k).toLong)
@@ -549,13 +467,13 @@ object Shingles {
     * [[charWindowHashesEval]] — O(n) total, in-doc multiplicity kept.
     * Replaces the transform(sequence)/xxhash64/slice HOF tower, which
     * interpreted per element AND broke plan canonicalization (lambda
-    * variables defeat ReuseExchange, so the rollup shuffled twice). */
-  /** Primitive form of [[tokenWindowHashesEval]] — no per-window boxing. */
+    * variables defeat ReuseExchange, so the rollup shuffled twice).
+    * Primitive form of [[tokenWindowHashesEval]] — no per-window boxing. */
   def tokenWindowHashesRaw(text: UTF8String, k: Int): Array[Long] = {
     if (k <= 0) return Array.emptyLongArray
     // per-token content hashes in one pass over the UTF-8 bytes (the
-    // token hash rolls over CODE POINTS, so byte-direct decode yields
-    // bit-identical values); invalid UTF-8 falls back to the legacy path
+    // token hash rolls over CODE POINTS, the same ones a String decode
+    // yields)
     val nb = text.numBytes()
     val base = text.getBaseObject
     val off = text.getBaseOffset
@@ -571,7 +489,6 @@ object Shingles {
       if (b >= 0) cp = b
       else {
         val d = decodeCp(base, off, i, nb)
-        if (d < 0) return tokenWindowHashesRawStr(text, k)
         cp = d >>> 3; len = d & 7
       }
       val w = isWordCp(cp)
@@ -583,48 +500,6 @@ object Shingles {
         toks(m) = fmix64(th); m += 1; inRun = false
       }
       i += len
-    }
-    if (inRun) {
-      if (m == toks.length) toks = java.util.Arrays.copyOf(toks, m + 1)
-      toks(m) = fmix64(th); m += 1
-    }
-    if (m < k) return Array.emptyLongArray
-    var bk = 1L
-    var e = 0
-    while (e < k) { bk *= RollBase; e += 1 }
-    val out = new Array[Long](m - k + 1)
-    var h = 0L
-    var j = 0
-    while (j < m) {
-      h = h * RollBase + toks(j)
-      if (j >= k) h -= bk * toks(j - k)
-      if (j >= k - 1) out(j - k + 1) = h
-      j += 1
-    }
-    out
-  }
-
-  /** Legacy String-decoding token-window pass — invalid-UTF-8 fallback
-    * (U+FFFD replacement parity with `toString`). */
-  private def tokenWindowHashesRawStr(text: UTF8String, k: Int): Array[Long] = {
-    val s = text.toString
-    val len = s.length
-    var toks = new Array[Long](math.max(16, len / 6))
-    var m = 0
-    var i = 0
-    var inRun = false
-    var th = 0L
-    while (i < len) {
-      val cp = s.codePointAt(i)
-      val w = isWordCp(cp)
-      if (w) {
-        if (!inRun) { inRun = true; th = 1125899906842597L }
-        th = th * RollBase + cp
-      } else if (inRun) {
-        if (m == toks.length) toks = java.util.Arrays.copyOf(toks, m * 2)
-        toks(m) = fmix64(th); m += 1; inRun = false
-      }
-      i += Character.charCount(cp)
     }
     if (inRun) {
       if (m == toks.length) toks = java.util.Arrays.copyOf(toks, m + 1)
@@ -754,73 +629,37 @@ object Shingles {
         // is xxhash64 over the token's UTF-8 bytes (what the StringType
         // dispatch computes), so hashing the byte range in place skips
         // both the toString decode and the per-token String+UTF8String
-        // allocations. Invalid UTF-8 falls back to the legacy per-field
-        // path for U+FFFD parity.
+        // allocations
         val nb = s.numBytes()
         val base = s.getBaseObject
         val off = s.getBaseOffset
-        val mark = out.size() // rollback point for the invalid-UTF-8 fallback
         var i = 0
         var runStart = -1
-        var bad = false
-        while (i < nb && !bad) {
+        while (i < nb) {
           val b = org.apache.spark.unsafe.Platform.getByte(base, off + i)
           var cp = 0
           var len = 1
           if (b >= 0) cp = b
           else {
             val d = decodeCp(base, off, i, nb)
-            if (d < 0) bad = true else { cp = d >>> 3; len = d & 7 }
+            cp = d >>> 3; len = d & 7
           }
-          if (!bad) {
-            val w = isWordCp(cp)
-            if (w && runStart < 0) runStart = i
-            if (!w && runStart >= 0) {
-              out.add(new GenericInternalRow(Array[Any](names(f),
-                XXH64.hashUnsafeBytes(base, off + runStart, i - runStart, 42L))))
-              runStart = -1
-            }
-            i += len
+          val w = isWordCp(cp)
+          if (w && runStart < 0) runStart = i
+          if (!w && runStart >= 0) {
+            out.add(new GenericInternalRow(Array[Any](names(f),
+              XXH64.hashUnsafeBytes(base, off + runStart, i - runStart, 42L))))
+            runStart = -1
           }
+          i += len
         }
-        if (bad) {
-          // drop this field's partial byte-pass output, then redo the
-          // whole field on the legacy path
-          while (out.size() > mark) out.remove(out.size() - 1)
-          fieldTokensLegacy(s, names(f), out)
-        } else if (runStart >= 0)
+        if (runStart >= 0)
           out.add(new GenericInternalRow(Array[Any](names(f),
             XXH64.hashUnsafeBytes(base, off + runStart, nb - runStart, 42L))))
       }
       f += 1
     }
     new GenericArrayData(out.toArray)
-  }
-
-  /** Legacy String-decoding per-field tokenizer+hasher — invalid-UTF-8
-    * fallback; the caller truncates the field's partial byte-pass output
-    * back to its mark before calling. */
-  private def fieldTokensLegacy(value: UTF8String, name: UTF8String,
-      out: java.util.ArrayList[Any]): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XxHash64Function}
-    val s = value.toString
-    def add(tok: String): Unit = {
-      val h = XxHash64Function.hash(UTF8String.fromString(tok), StringType, 42L)
-      out.add(new GenericInternalRow(Array[Any](name, h)))
-    }
-    var i = 0
-    var runStart = -1
-    val len = s.length
-    while (i < len) {
-      val cp = s.codePointAt(i)
-      val w = isWordCp(cp)
-      if (w && runStart < 0) runStart = i
-      if (!w && runStart >= 0) {
-        add(s.substring(runStart, i)); runStart = -1
-      }
-      i += Character.charCount(cp)
-    }
-    if (runStart >= 0) add(s.substring(runStart, len))
   }
 
   def fieldTokenHashes(values: Column): Column = {

@@ -2,35 +2,16 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import java.util.regex.Pattern
 
 /** Tokenized full-text matching, mirroring the reference semantics
   * (lib/logstorage/tokenizer.go:12-60 — words are runs of Unicode
   * letters/digits/underscore; lib/logstorage/filter_phrase.go — a phrase
   * matches when it occurs in the value bounded by non-word chars).
-  *
-  * Compiled as `rlike` with literal patterns so Catalyst keeps the match
-  * inside whole-stage codegen with a precompiled java.util.regex Pattern.
+  * Matching compiles to WordMatch's codegen'd scans; rows are tokenized
+  * by the `graft_tokens` kernel (Shingles.tokens).
   */
 object TextMatch {
   private val wordClass = "\\p{L}\\p{N}_"
-
-  private def isWordChar(c: Char): Boolean =
-    Character.isLetterOrDigit(c) || c == '_'
-
-  /** Left word-boundary lookbehind, only when the edge char is a word char
-    * (boundary checks don't apply to non-word edges — filter_phrase.go:61). */
-  private def lb(s: String): String =
-    if (s.nonEmpty && isWordChar(s.head)) s"(?<![$wordClass])" else ""
-
-  private def rb(s: String): String =
-    if (s.nonEmpty && isWordChar(s.last)) s"(?![$wordClass])" else ""
-
-  def phraseRegex(phrase: String): String =
-    lb(phrase) + Pattern.quote(phrase) + rb(phrase)
-
-  def prefixRegex(prefix: String): String =
-    lb(prefix) + Pattern.quote(prefix)
 
   /** `field:phrase` — empty phrase matches empty/missing value. Compiled
     * to the codegen'd substring+boundary scan (WordMatch), not a regex —
@@ -56,15 +37,10 @@ object TextMatch {
     if (phrases.isEmpty) lit(true)
     else WordMatch.seqMatch(c, phrases)
 
-  /** The regex formulation matchSequence replaced — kept as the semantic
-    * spec for the differential property test. */
-  def sequenceRegex(phrases: Seq[String]): String =
-    "(?s)" + phrases.map(p => lb(p) + Pattern.quote(p) + rb(p)).mkString(".*?")
-
-  /** Tokenize into words (tokenizer.go): runs of letters/digits/underscore. */
-  def tokenize(c: Column): Column =
-    filter(split(c, s"[^$wordClass]+"), x => x =!= "")
-
+  /** Query-side tokens (tokenizer.go): runs of letters/digits/underscore,
+    * the same tokens `graft_tokens` yields per row — pinned to the
+    * reference's goldens by KernelConformanceSpec and to the kernel by
+    * Utf8ByteKernelSpec. */
   def tokenizeString(s: String): Seq[String] =
     s.split(s"[^$wordClass]+").toSeq.filter(_.nonEmpty)
 }

@@ -57,16 +57,6 @@ object TextStatsKernel {
   val esStop = Seq("el", "la", "de", "los", "que", "y", "en")
   val deStop = Seq("der", "die", "und", "das", "ist", "nicht")
 
-  // value type MUST be the boxed Integer: with a primitive Int value
-  // type, scalac unboxes get()'s null-on-miss to 0 — silently counting
-  // every short token as language 0
-  private val stopLang: java.util.HashMap[String, java.lang.Integer] = {
-    val m = new java.util.HashMap[String, java.lang.Integer]()
-    enStop.foreach(m.put(_, Int.box(0)))
-    esStop.foreach(m.put(_, Int.box(1)))
-    deStop.foreach(m.put(_, Int.box(2)))
-    m
-  }
   private val maxStopLen = (enStop ++ esStop ++ deStop).map(_.length).max
 
   private val LANGS = Array(UTF8String.fromString("en"),
@@ -74,24 +64,18 @@ object TextStatsKernel {
   private val ZH = UTF8String.fromString("zh")
   private val UND = UTF8String.fromString("und")
 
-  /** `\p{L}\p{N}_` membership for a code point. NOT isLetterOrDigit —
-    * that misses the Nl/No categories \p{N} includes (a divergence that
-    * would silently desync this kernel from WordMatch and the blooms). */
-  private def isWordCp(cp: Int): Boolean =
-    Character.isLetter(cp) || cp == '_' || {
-      val t = Character.getType(cp)
-      t == Character.DECIMAL_DIGIT_NUMBER || t == Character.LETTER_NUMBER ||
-        t == Character.OTHER_NUMBER
-    }
-
   /** Stopword lookup keyed by UTF-8 BYTES (UTF8String equality), so the
     * byte-direct walks below never materialize token Strings. Stopwords
     * are pure ASCII, so byte equality ⇔ string equality, and a byte
     * length ≤ maxStopLen gate is exact for them (any multi-byte token
-    * has byteLen > charLen and can never equal an ASCII stopword). */
+    * has byteLen > charLen and can never equal an ASCII stopword).
+    * The value type MUST be the boxed Integer: with a primitive Int value
+    * type, scalac unboxes get()'s null-on-miss to 0 — silently counting
+    * every short token as language 0. */
   private val stopLangU8: java.util.HashMap[UTF8String, java.lang.Integer] = {
     val m = new java.util.HashMap[UTF8String, java.lang.Integer]()
-    stopLang.forEach((k, v) => m.put(UTF8String.fromString(k), v))
+    for ((ws, lang) <- Seq(enStop, esStop, deStop).zipWithIndex; w <- ws)
+      m.put(UTF8String.fromString(w), Int.box(lang))
     m
   }
 
@@ -104,10 +88,10 @@ object TextStatsKernel {
       Character.UnicodeScript.of(cp) == Character.UnicodeScript.HAN
 
   def eval(text: UTF8String): InternalRow = {
-    // one pass over the UTF-8 bytes (the Shingles.decodeCp pattern):
-    // no toString decode, stopwords matched as byte slices, the Han
-    // check range-gated. Invalid UTF-8 falls back to the legacy
-    // String-decoding walk for U+FFFD replacement parity.
+    // one pass over the UTF-8 bytes, the only walk for every input:
+    // malformed sequences decode to U+FFFD as `toString` would
+    // (Shingles.decodeCp); no toString decode, stopwords matched as byte
+    // slices, the Han check range-gated
     val nb = text.numBytes()
     val base = text.getBaseObject
     val off = text.getBaseOffset
@@ -131,11 +115,10 @@ object TextStatsKernel {
       var clen = 1
       if (b >= 0) cp = b
       else {
-        val d = Shingles.decodeCpShared(base, off, i, nb)
-        if (d < 0) return evalStr(text)
+        val d = Shingles.decodeCp(base, off, i, nb)
         cp = d >>> 3; clen = d & 7
       }
-      if (isWordCp(cp)) {
+      if (Shingles.isWordCp(cp)) {
         if (tokStart < 0) tokStart = i
         if (!han && isHanCp(cp)) han = true
       } else {
@@ -146,44 +129,6 @@ object TextStatsKernel {
       i += clen
     }
     if (tokStart >= 0) endToken(nb)
-    val lang =
-      if (han) ZH
-      else if (counts(0) >= counts(1) && counts(0) >= counts(2) && counts(0) > 0) LANGS(0)
-      else if (counts(1) >= counts(2) && counts(1) > 0) LANGS(1)
-      else if (counts(2) > 0) LANGS(2)
-      else UND
-    new GenericInternalRow(Array[Any](lang, nTokens))
-  }
-
-  /** Legacy String-decoding walk — invalid-UTF-8 fallback. */
-  private def evalStr(text: UTF8String): InternalRow = {
-    val s = text.toString
-    val len = s.length
-    var i = 0
-    var nTokens = 0L
-    var tokStart = -1
-    var han = false
-    val counts = new Array[Int](3)
-    def endToken(end: Int): Unit = {
-      nTokens += 1L
-      if (end - tokStart <= maxStopLen) {
-        val lang = stopLang.get(s.substring(tokStart, end))
-        if (lang != null) counts(lang.intValue) += 1
-      }
-      tokStart = -1
-    }
-    while (i < len) {
-      val cp = s.codePointAt(i)
-      if (isWordCp(cp)) {
-        if (tokStart < 0) tokStart = i
-        if (!han && isHanCp(cp)) han = true
-      } else {
-        if (tokStart >= 0) endToken(i)
-        if (!han && isHanCp(cp)) han = true
-      }
-      i += Character.charCount(cp)
-    }
-    if (tokStart >= 0) endToken(len)
     val lang =
       if (han) ZH
       else if (counts(0) >= counts(1) && counts(0) >= counts(2) && counts(0) > 0) LANGS(0)
@@ -208,8 +153,8 @@ object TextStatsKernel {
     * Column space, identical ops in identical order, so the doubles are
     * bit-identical to the regexp tower this replaces. */
   def qualityCountsEval(text: UTF8String): InternalRow = {
-    // byte-direct walk, same structure as [[eval]]; invalid UTF-8 falls
-    // back to the legacy String-decoding walk
+    // byte-direct walk, same structure as [[eval]] (one walk; malformed
+    // sequences decode to U+FFFD)
     val nb = text.numBytes()
     val base = text.getBaseObject
     val off = text.getBaseOffset
@@ -233,11 +178,10 @@ object TextStatsKernel {
       var clen = 1
       if (b >= 0) cp = b
       else {
-        val d = Shingles.decodeCpShared(base, off, i, nb)
-        if (d < 0) return qualityCountsEvalStr(text)
+        val d = Shingles.decodeCp(base, off, i, nb)
         cp = d >>> 3; clen = d & 7
       }
-      if (isWordCp(cp)) {
+      if (Shingles.isWordCp(cp)) {
         if (tokStart < 0) tokStart = i
       } else if (tokStart >= 0) endToken(i)
       // independent of tokenization: the regex class includes `_`, which
@@ -247,36 +191,6 @@ object TextStatsKernel {
       i += clen
     }
     if (tokStart >= 0) endToken(nb)
-    new GenericInternalRow(Array[Any](nTokens, punct, stops))
-  }
-
-  /** Legacy String-decoding walk — invalid-UTF-8 fallback. */
-  private def qualityCountsEvalStr(text: UTF8String): InternalRow = {
-    val s = text.toString
-    val len = s.length
-    var i = 0
-    var nTokens = 0L
-    var punct = 0L
-    var stops = 0L
-    var tokStart = -1
-    def endToken(end: Int): Unit = {
-      nTokens += 1L
-      if (end - tokStart <= maxStopLen) {
-        val lang = stopLang.get(s.substring(tokStart, end))
-        if (lang != null && lang.intValue == 0) stops += 1
-      }
-      tokStart = -1
-    }
-    while (i < len) {
-      val cp = s.codePointAt(i)
-      if (isWordCp(cp)) {
-        if (tokStart < 0) tokStart = i
-      } else if (tokStart >= 0) endToken(i)
-      if ((cp >= '!' && cp <= '/') || (cp >= ':' && cp <= '@') ||
-          (cp >= '[' && cp <= '`') || (cp >= '{' && cp <= '~')) punct += 1
-      i += Character.charCount(cp)
-    }
-    if (tokStart >= 0) endToken(len)
     new GenericInternalRow(Array[Any](nTokens, punct, stops))
   }
 

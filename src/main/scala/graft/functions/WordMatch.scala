@@ -38,9 +38,9 @@ case class WordMatchExpr(child: Expression, phrase: String,
   override def nullable: Boolean = child.nullable
 
   private val startW =
-    phrase.nonEmpty && WordMatch.isWordCp(phrase.codePointAt(0))
+    phrase.nonEmpty && Shingles.isWordCp(phrase.codePointAt(0))
   private val endW =
-    phrase.nonEmpty && WordMatch.isWordCp(phrase.codePointBefore(phrase.length))
+    phrase.nonEmpty && Shingles.isWordCp(phrase.codePointBefore(phrase.length))
 
   override def nullSafeEval(input: Any): Any =
     WordMatch.matches(input.asInstanceOf[UTF8String].toString, phrase,
@@ -92,16 +92,7 @@ case class SeqMatchExpr(child: Expression, phrases: Seq[String])
 }
 
 object WordMatch {
-  /** Word-char class — must mirror the \p{L}\p{N}_ class the tokenizer and
-    * the regex formulation use (isLetterOrDigit misses \p{Nl}/\p{No} like
-    * 'Ⅻ'/'²', which would silently desync this matcher from the bloom
-    * sidecar's token stream). */
-  def isWordCp(cp: Int): Boolean = {
-    if (cp == '_' || Character.isLetter(cp)) return true
-    val t = Character.getType(cp)
-    t == Character.DECIMAL_DIGIT_NUMBER || t == Character.LETTER_NUMBER ||
-      t == Character.OTHER_NUMBER
-  }
+  import Shingles.isWordCp
 
   /** Substring scan with boundary checks; code-point-aware so
     * supplementary-plane letters count as word chars exactly like the

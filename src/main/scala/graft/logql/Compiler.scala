@@ -613,7 +613,7 @@ object Compiler {
     val c = strF(df, fld)
     def isWordValue(v: String): Boolean =
       v.nonEmpty && v.codePoints().allMatch(cp =>
-        graft.functions.WordMatch.isWordCp(cp))
+        graft.functions.Shingles.isWordCp(cp))
     val (toks, phrases) =
       if (vs.size <= 64) (Nil, vs) else vs.distinct.partition(isWordValue)
     if (phrases.size > 1000)
@@ -623,7 +623,7 @@ object Compiler {
     val tokPart: Option[Column] =
       if (toks.isEmpty) None
       else {
-        val w = TextMatch.tokenize(c)
+        val w = graft.functions.Shingles.tokens(c)
         Some(if (all) size(array_except(typedLit(toks), w)) === 0
              else arrays_overlap(w, typedLit(toks)))
       }
@@ -942,7 +942,7 @@ object Compiler {
       }
 
     case Pipe.UnpackWords(from, out, limitN, dropDup) =>
-      val words = TextMatch.tokenize(strF(df, from))
+      val words = graft.functions.Shingles.tokens(strF(df, from))
       // first-occurrence dedup (pipe_unpack_words.go:104 keeps duplicates
       // unless drop_duplicates), then this engine's limit extension
       val deduped = if (dropDup) array_distinct(words) else words

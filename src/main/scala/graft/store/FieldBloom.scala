@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NumericType, StringType}
 
-import graft.functions.TextMatch
+import graft.functions.{Shingles, TextMatch}
 import graft.logql.Compiler
 
 /** Per-field token-bloom sidecar: the Spark-layout analogue of the
@@ -77,13 +77,14 @@ object FieldBloom {
     * last run of word runes may continue past the prefix, so only the
     * tokens before it are guaranteed complete in a match). */
   def tokensSkipLast(s: String): Seq[String] = {
+    // walk back by CODE POINT through the row tokenizer's word class: a
+    // trailing \p{Nl}/\p{No} or astral letter still continues the token,
+    // and requiring that incomplete token would prune matching files
     var end = s.length
-    while (end > 0 && isWordChar(s.charAt(end - 1))) end -= 1
+    while (end > 0 && Shingles.isWordCp(s.codePointBefore(end)))
+      end = s.offsetByCodePoints(end, -1)
     TextMatch.tokenizeString(s.substring(0, end))
   }
-
-  private def isWordChar(c: Char): Boolean =
-    Character.isLetter(c) || Character.isDigit(c) || c == '_'
 
   /** Per-field word tokens that every matching row must contain, from the
     * query's top-level AND filters (the reference's per-filter `tokens`

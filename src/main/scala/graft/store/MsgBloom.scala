@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextMatch
+import graft.functions.Shingles
 
 /** M7 token-bloom sidecar: per-file bloom filters over `_msg` word tokens,
   * the Spark-layout analogue of the reference's per-block bloom pruning
@@ -88,7 +88,7 @@ object MsgBloom {
     val agg = udaf(new BloomAgg(mBits), Encoders.scalaLong)
     logs
       .select(input_file_name().as("file"),
-        explode(array_distinct(TextMatch.tokenize(col("_msg")))).as("tok"))
+        explode(array_distinct(Shingles.tokens(col("_msg")))).as("tok"))
       .groupBy("file")
       .agg(agg(xxhash64(col("tok"))).as("bloom"))
       .coalesce(1)
@@ -151,7 +151,7 @@ object MsgBloom {
       val bloomed = spark.read.option("basePath", s"$dir/logs")
         .parquet(missing: _*)
         .select(input_file_name().as("file"),
-          explode(array_distinct(TextMatch.tokenize(col("_msg")))).as("tok"))
+          explode(array_distinct(Shingles.tokens(col("_msg")))).as("tok"))
         .groupBy("file")
         .agg(agg(xxhash64(col("tok"))).as("bloom"))
         .persist()

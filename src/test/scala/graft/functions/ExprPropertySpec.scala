@@ -180,8 +180,8 @@ class ExprPropertySpec extends SparkSuite {
       val got = evalBatch(inputs,
         c => WordMatch.wordMatch(c, phrase, prefix))
       val want = evalBatch(inputs, c =>
-        if (prefix) c.rlike(TextMatch.prefixRegex(phrase))
-        else c.rlike(TextMatch.phraseRegex(phrase)))
+        if (prefix) c.rlike(TextMatchRegex.prefixRegex(phrase))
+        else c.rlike(TextMatchRegex.phraseRegex(phrase)))
       inputs.lazyZip(got).lazyZip(want).foreach { (in, g, w) =>
         assert(g == w,
           s"word-match mismatch for input '$in' phrase '$phrase' prefix=$prefix: got $g want $w")
@@ -466,7 +466,7 @@ class ExprPropertySpec extends SparkSuite {
       Seq("db", "db"), Seq("日本", "err"), Seq(": ", "x"))
     for (ps <- seqs) {
       val got = evalBatch(inputs, c => TextMatch.matchSequence(c, ps))
-      val want = evalBatch(inputs, c => c.rlike(TextMatch.sequenceRegex(ps)))
+      val want = evalBatch(inputs, c => c.rlike(TextMatchRegex.sequenceRegex(ps)))
       inputs.lazyZip(got).lazyZip(want).foreach { (in, g, w) =>
         assert(g == w,
           s"seq mismatch for input '$in' seq $ps: got $g want $w")

@@ -6,16 +6,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the r15 byte-direct kernel rewrites (Shingles/MinHashSim).
   *
-  * The byte-direct kernels must be value-identical to the String-decoding
-  * r14 kernels on EVERY byte sequence, including invalid UTF-8 — where
-  * `toString` substitutes U+FFFD and the byte walkers must detect the
-  * malformed sequence and fall back. The differential here is
-  * `kernel(raw) == kernel(normalize(raw))` with
+  * Each byte-direct kernel has one walk for every byte sequence,
+  * including invalid UTF-8: Shingles.decodeCp decodes a malformed
+  * sequence to U+FFFD over exactly the bytes `toString` replaces, so the
+  * walk sees the code points the String decode would. The decoder is
+  * checked against `toString` exhaustively on short inputs; the kernels
+  * by the differential `kernel(raw) == kernel(normalize(raw))` with
   * `normalize = fromString(raw.toString)`: on valid input normalize is
-  * the identity (same bytes → same path); on invalid input the left side
-  * exercises the fallback and the right side the byte path over the
-  * replacement-normalized bytes, so a fallback that misfires or a decoder
-  * that accepts a sequence Java rejects shows up as a value difference. */
+  * the identity; on invalid input the left side walks the malformed bytes
+  * and the right side their replacement-normalized form, so a decoder
+  * that splits a malformed sequence differently from Java shows up as a
+  * value difference. */
 class Utf8ByteKernelSpec extends AnyFunSuite {
 
   private def norm(raw: UTF8String): UTF8String =
@@ -57,6 +58,59 @@ class Utf8ByteKernelSpec extends AnyFunSuite {
   }
 
   private def allCases = targeted ++ randomCases
+
+  /** Code points decodeCp yields walking all of `bytes`. */
+  private def decoded(bytes: Array[Byte]): Array[Int] = {
+    val u = UTF8String.fromBytes(bytes)
+    val out = new Array[Int](bytes.length)
+    var i = 0; var n = 0
+    while (i < bytes.length) {
+      val d = Shingles.decodeCp(u.getBaseObject, u.getBaseOffset, i,
+        bytes.length)
+      out(n) = d >>> 3; n += 1; i += d & 7
+    }
+    java.util.Arrays.copyOf(out, n)
+  }
+
+  test("decodeCp ≡ toString's code points on every short byte string") {
+    val all = (0 until 256).map(_.toByte)
+    val cases = Iterator(Array.emptyByteArray) ++
+      all.iterator.map(a => Array(a)) ++
+      all.iterator.flatMap(a => all.iterator.map(b => Array(a, b))) ++
+      all.iterator.filter(a => (a & 0xFF) >= 0xC0).flatMap(a =>
+        all.iterator.flatMap(b => all.iterator.map(c => Array(a, b, c))))
+    val suffix = "a".getBytes("UTF-8")
+    var checked = 0
+    var bad = 0
+    val firstBad = Seq.newBuilder[String]
+    for (b <- cases; bytes <- Iterator(b, b ++ suffix)) {
+      val want = UTF8String.fromBytes(bytes).toString.codePoints().toArray
+      if (!java.util.Arrays.equals(decoded(bytes), want)) {
+        if (bad < 10) firstBad += bytes.map(x => f"$x%02x").mkString(" ")
+        bad += 1
+      }
+      checked += 1
+    }
+    // 1 + 256 + 256² + 64·256² inputs, each bare and with the suffix
+    assert(checked == 2 * (1 + 256 + 65536 + 64 * 65536))
+    if (bad > 0) fail(s"$bad mismatches, first: ${firstBad.result()}")
+  }
+
+  test("tokensEval ≡ tokenizeString on non-Nd numbers and astral letters") {
+    // ² (No), Ⅻ (Nl), 𝐀 (astral Lu, a surrogate pair), ٣ (Nd, Arabic-
+    // Indic), _ and é are word code points; the rest separate tokens
+    val word = Seq("²", "Ⅻ", "𝐀", "٣", "_", "é", "a", "7")
+    val sep = Seq(" ", ".", "-", "—", "\u00A0", "😀", "\t")
+    val rnd = new scala.util.Random(17)
+    val inputs = Seq("", "ab²", "ab²c", "errⅫ", "x𝐀", "𝐀𝐀 ٣٣") ++
+      (0 until 2000).map(_ => (0 until rnd.nextInt(14)).map { _ =>
+        if (rnd.nextInt(3) == 0) sep(rnd.nextInt(sep.size))
+        else word(rnd.nextInt(word.size))
+      }.mkString)
+    for (s <- inputs)
+      assert(strings(Shingles.tokensEval(UTF8String.fromString(s))) ==
+        TextMatch.tokenizeString(s), s"input '$s'")
+  }
 
   test("tokensEval: byte path + fallback ≡ toString semantics") {
     for (bytes <- allCases) {

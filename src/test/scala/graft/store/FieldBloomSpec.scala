@@ -63,6 +63,32 @@ class FieldBloomSpec extends SparkSuite {
     assert(FieldBloom.tokensSkipLast("") == Nil)
   }
 
+  test("tokensSkipLast trims a trailing token by code point") {
+    // ² is \p{No}, Ⅻ \p{Nl}, 𝐀 an astral letter (a surrogate pair): each
+    // continues the trailing word, so none of these prefixes has a
+    // complete token
+    assert(FieldBloom.tokensSkipLast("ab²") == Nil)
+    assert(FieldBloom.tokensSkipLast("errⅫ") == Nil)
+    assert(FieldBloom.tokensSkipLast("x𝐀") == Nil)
+  }
+
+  test("a prefix ending in a non-Nd number keeps its rows through the bloom") {
+    import spark.implicits._
+    val dir = tmp("prefixnum")
+    val df = (1 to 20).map { i =>
+      val day = if (i <= 10) "2024-01-01" else "2024-01-02"
+      (java.sql.Timestamp.valueOf(s"$day 10:${"%02d".format(i % 60)}:00"),
+        if (i <= 10) s"ab²c row $i" else s"other row $i", "app1")
+    }.toDF("_time", "_msg", "app")
+    LogStore.ingest(df, dir, Seq("app"))
+    MsgBloom.build(spark, dir)
+    val q = "\"ab²\"* | stats count() c"
+    val pruned = MsgBloom.query(spark, dir, q).collect().toSeq
+    val full = Compiler.run(LogStore.read(spark, dir), q).collect().toSeq
+    assert(full.head.getLong(0) == 10L)
+    assert(pruned == full, s"$pruned vs $full")
+  }
+
   test("top-level fields: build, prune, identical results") {
     val dir = topLevelStore()
     FieldBloom.build(spark, dir)
