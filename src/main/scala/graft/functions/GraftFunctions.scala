@@ -29,6 +29,11 @@ object GraftFunctions {
   private def str(e: Expression): String =
     e.eval().asInstanceOf[UTF8String].toString
 
+  private def strs(e: Expression): Seq[String] = {
+    val arr = e.eval().asInstanceOf[ArrayData]
+    (0 until arr.numElements()).map(i => arr.getUTF8String(i).toString)
+  }
+
   /** name → builder, for both injectFunction and temp registration. */
   val all: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("graft_dot",
@@ -114,6 +119,15 @@ object GraftFunctions {
       "graft_json_flatten_strict(s) - like graft_json_flatten but NULL " +
         "for malformed/non-object input",
       es => JsonFlattenExpr(es.head, nullForNonObject = true)),
+    ("graft_jsonline",
+      "graft_jsonline(s, timeKeys, msgKeys) - generator: one (time, _msg, " +
+        "fields) row per JSON object line from one parse, none for a " +
+        "malformed line; the first present key of each list is picked",
+      es => JsonLineGen(es(0), strs(es(1)), strs(es(2)))),
+    ("graft_flush_instant",
+      "graft_flush_instant(micros) - the timestamp `micros`, held by " +
+        "reference in generated code instead of folded into it",
+      es => FlushInstant(es.head.eval().asInstanceOf[Long])),
     ("graft_json_get",
       "graft_json_get(json, seg, ...) - scalar JSON field lookup; " +
         "sentinel for object/array values",
@@ -188,20 +202,10 @@ object GraftFunctions {
       es => GoFloatStrExpr(es(0))),
     ("graft_seq_match",
       "graft_seq_match(s, phrases) - ordered word-sequence match",
-      es => {
-        val arr = es(1).eval().asInstanceOf[ArrayData]
-        val ps = (0 until arr.numElements())
-          .map(i => arr.getUTF8String(i).toString)
-        SeqMatchExpr(es(0), ps)
-      }),
+      es => SeqMatchExpr(es(0), strs(es(1)))),
     ("graft_bm25_counts",
       "graft_bm25_counts(s, terms) - [dl, tf...] token counters, one pass",
-      es => {
-        val arr = es(1).eval().asInstanceOf[ArrayData]
-        val ts = (0 until arr.numElements())
-          .map(i => arr.getUTF8String(i).toString)
-        Bm25CountsExpr(es(0), ts)
-      }))
+      es => Bm25CountsExpr(es(0), strs(es(1)))))
 
   // weak keys: a strong session reference would pin every stopped
   // session's state for the JVM's lifetime (registration is idempotent,

@@ -2,12 +2,13 @@ package graft.functions
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, MapType, StringType}
+import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.types.{DataType, MapType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Reference-shape JSON → field map: nested objects flatten into
@@ -61,6 +62,66 @@ case class JsonFlattenExpr(child: Expression,
     copy(child = c)
 
   override def prettyName: String = "graft_json_flatten"
+}
+
+/** One jsonline row per input line, from ONE parse: the
+  * [[JsonFlattenExpr.flatten]] field map, then the per-row pick of the
+  * first present `timeKeys`/`msgKeys` entry (the `_time_field`/
+  * `_msg_field` fallback lists), then the map without the picked keys.
+  * Emits (raw time value or null, `_msg` or "", remaining fields), or no
+  * row at all for a malformed / non-object line.
+  *
+  * A generator, not a map-valued column: the optimizer inlines a
+  * projected column into every consumer (each `element_at`, each CASE
+  * arm, pushed-down filters, a lambda run per map entry), and each copy
+  * re-ran the JSON parse, 26 times per row in a flush. It neither
+  * inlines nor pushes filters through a generator's output. */
+case class JsonLineGen(child: Expression, timeKeys: Seq[String],
+                       msgKeys: Seq[String])
+    extends UnaryExpression with Generator with CodegenFallback {
+
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("time", StringType, nullable = true),
+    StructField("_msg", StringType, nullable = false),
+    StructField("fields", MapType(StringType, StringType), nullable = false)))
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: StringType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"graft_jsonline needs a string input, got ${t.sql}")
+  }
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val s = child.eval(input)
+    if (s == null) return Nil
+    val pairs = JsonFlattenExpr.flatten(s.toString)
+    if (pairs == null) return Nil
+    val tKey = timeKeys.find(pairs.containsKey).orNull
+    val mKey = msgKeys.find(pairs.containsKey).orNull
+    val n = pairs.size - (if (tKey != null) 1 else 0) -
+      (if (mKey != null && mKey != tKey) 1 else 0)
+    val keys = new Array[Any](n)
+    val vals = new Array[Any](n)
+    var idx = 0
+    val it = pairs.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (e.getKey != tKey && e.getKey != mKey) {
+        keys(idx) = UTF8String.fromString(e.getKey)
+        vals(idx) = UTF8String.fromString(e.getValue)
+        idx += 1
+      }
+    }
+    Iterator.single(InternalRow(
+      if (tKey == null) null else UTF8String.fromString(pairs.get(tKey)),
+      UTF8String.fromString(if (mKey == null) "" else pairs.get(mKey)),
+      ArrayBasedMapData(keys, vals)))
+  }
+
+  override protected def withNewChildInternal(c: Expression): JsonLineGen =
+    copy(child = c)
+
+  override def prettyName: String = "graft_jsonline"
 }
 
 object JsonFlattenExpr {
@@ -168,6 +229,12 @@ object JsonFlattenExpr {
   def flattenColStrict(c: Column): Column = {
     GraftFunctions.ensure()
     call_function("graft_json_flatten_strict", c)
+  }
+
+  /** [[JsonLineGen]] over `c`: select it to get its three columns. */
+  def jsonLines(c: Column, timeKeys: Seq[String], msgKeys: Seq[String]): Column = {
+    GraftFunctions.ensure()
+    call_function("graft_jsonline", c, lit(timeKeys.toArray), lit(msgKeys.toArray))
   }
 
   /** xxHash64 with seed 0, 53-bit truncated upstream (hash pipe). */

@@ -20,11 +20,17 @@ import graft.streaming.Ingest
   * lone request immediately; a loaded server amortizes the Spark job
   * across every request that arrived during the previous write.
   *
-  * Buffering lines (not per-request DataFrames) matters twice over: the
-  * flush plan has a CONSTANT shape (one source, one parser) so whole-stage
-  * codegen caches across flushes instead of recompiling an N-way union,
-  * and the parse runs across executor threads instead of inside a
-  * single-partition LocalTableScan.
+  * Buffering lines (not per-request DataFrames) keeps the flush plan's
+  * SHAPE constant (one source, one parser) instead of an N-way union.
+  * Its generated code is constant too, because the flush instant is held
+  * by reference (FlushInstant) rather than inlined as a literal, so a
+  * steady-state flush reuses the compiled classes of the previous one.
+  *
+  * Each batch is sized once, by payload bytes (a one-line Loki/OTLP body
+  * can be large): up to [[GroupCommitter.SliceBytes]] it is one slice,
+  * parsed and written by a single task with no exchange; a bigger batch
+  * parses in one slice per SliceBytes and is salted across the writers
+  * (see [[Ingest.appendBatch]]'s `width`).
   *
   * Completing the future only after the append keeps read-your-writes: a
   * 200 response still means the rows are queryable, exactly like the
@@ -44,6 +50,21 @@ object GroupCommitter {
                                  build: DataFrame => DataFrame,
                                  streamFields: Seq[String], tenant: String,
                                  done: CompletableFuture[Unit])
+
+  /** Payload bytes per parse slice. About 2k typical jsonline rows: below
+    * it a flush costs less in one task than in a shuffle job. */
+  val SliceBytes: Long = 512L << 10
+
+  /** Slices for a batch of `bytes` payload bytes, at most 32. */
+  def width(bytes: Long): Int =
+    math.min(32L, math.max(1L, bytes / SliceBytes)).toInt
+
+  private def bytes(p: Payload): Long = p match {
+    case Lines(ls) => ls.iterator.map(_.length.toLong + 1).sum
+    case Rows(rs) => rs.iterator.map { case (_, m, f) =>
+      16L + m.length + f.iterator.map { case (k, v) => k.length + v.length + 2L }.sum
+    }.sum
+  }
 }
 
 final class GroupCommitter(spark: SparkSession, storeDir: String,
@@ -60,36 +81,33 @@ final class GroupCommitter(spark: SparkSession, storeDir: String,
   def enqueued: Long = enqueuedCount.get
   def flushes: Long = flushCount.get
 
-  private def linesDF(lines: Seq[String]): DataFrame = {
+  private def linesDF(lines: Seq[String], width: Int): DataFrame = {
     import spark.implicits._
-    // parallelize so the parse fans out instead of running in one
-    // LocalTableScan task; slice size keeps tiny batches single-task
-    val slices = math.min(32, math.max(1, lines.size / 2048))
-    spark.createDataset(spark.sparkContext.parallelize(lines, slices)).toDF("value")
+    spark.createDataset(spark.sparkContext.parallelize(lines,
+      math.max(1, math.min(width, lines.size)))).toDF("value")
   }
 
   private def rowsDF(
-      rows: Seq[(java.sql.Timestamp, String, Map[String, String])]): DataFrame = {
+      rows: Seq[(java.sql.Timestamp, String, Map[String, String])],
+      width: Int): DataFrame = {
     import spark.implicits._
-    val slices = math.min(32, math.max(1, rows.size / 2048))
-    spark.createDataset(spark.sparkContext.parallelize(rows, slices))
-      .toDF("_time", "_msg", "fields")
+    spark.createDataset(spark.sparkContext.parallelize(rows,
+      math.max(1, math.min(width, rows.size)))).toDF("_time", "_msg", "fields")
   }
 
-  private def toDF(p: Payload): DataFrame = p match {
-    case Lines(ls) => linesDF(ls)
-    case Rows(rs) => rowsDF(rs)
-  }
-
-  private def merged(ps: Seq[Payload]): DataFrame = ps match {
-    case Seq(one) => toDF(one)
-    case many if many.forall(_.isInstanceOf[Lines]) =>
-      linesDF(many.flatMap(_.asInstanceOf[Lines].lines))
-    case many if many.forall(_.isInstanceOf[Rows]) =>
-      rowsDF(many.flatMap(_.asInstanceOf[Rows].rows))
-    case many => // mixed kinds under one key can't happen from IngestServer,
-      // but merge defensively via union of built frames
-      many.map(toDF).reduce(_.unionByName(_))
+  /** The batch of `ps` as one DataFrame, and its width. */
+  private def merged(ps: Seq[Payload]): (DataFrame, Int) = {
+    val w = GroupCommitter.width(ps.iterator.map(GroupCommitter.bytes).sum)
+    ps match {
+      case many if many.forall(_.isInstanceOf[Lines]) =>
+        (linesDF(many.flatMap(_.asInstanceOf[Lines].lines), w), w)
+      case many if many.forall(_.isInstanceOf[Rows]) =>
+        (rowsDF(many.flatMap(_.asInstanceOf[Rows].rows), w), w)
+      case many => // mixed kinds under one key can't happen from IngestServer,
+        // but merge defensively via union of built frames — a union spans
+        // a partition per part, so it is never a one-task batch
+        (many.map(p => merged(Seq(p))._1).reduce(_.unionByName(_)), math.max(2, w))
+    }
   }
 
   private val flusher = new Thread(() => {
@@ -140,13 +158,9 @@ final class GroupCommitter(spark: SparkSession, storeDir: String,
             try {
               // identical key ⇒ identical build fn; parse the concatenated
               // payload once through the first entry's builder
-              val t0 = System.nanoTime()
-              val df = group.head.build(merged(group.map(_.payload)))
-              val t1 = System.nanoTime()
-              Ingest.appendBatch(df, storeDir, fields, tenant)
-              val t2 = System.nanoTime()
-              if (sys.env.contains("GRAFT_INGEST_DEBUG"))
-                System.err.println(f"[flush] n=${group.size} build=${(t1-t0)/1e3}%.0fus append=${(t2-t1)/1e6}%.0fms")
+              val (df, width) = merged(group.map(_.payload))
+              Ingest.appendBatch(group.head.build(df), storeDir, fields, tenant,
+                width)
               flushCount.incrementAndGet()
               Metrics.ingestCommits.incrementAndGet()
               group.foreach(_.done.complete(()))
@@ -156,8 +170,9 @@ final class GroupCommitter(spark: SparkSession, storeDir: String,
                 // to per-entry appends so only the offender 400s
                 group.foreach { e =>
                   try {
-                    Ingest.appendBatch(e.build(toDF(e.payload)), storeDir,
-                      fields, tenant)
+                    val (df, width) = merged(Seq(e.payload))
+                    Ingest.appendBatch(e.build(df), storeDir, fields, tenant,
+                      width)
                     flushCount.incrementAndGet()
                     Metrics.ingestCommits.incrementAndGet()
                     e.done.complete(())

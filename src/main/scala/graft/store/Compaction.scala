@@ -130,8 +130,12 @@ object Compaction {
       // every file's promoted column is now physically a string
       // (applyPromotion's cast) — the manifest must follow, or the
       // explicit-schema read keeps requesting the old numeric type and
-      // throws PARQUET_COLUMN_DATA_TYPE_MISMATCH (ADVICE r14)
-      LogStore.overrideManifestStringTypes(dir, promoted)
+      // throws PARQUET_COLUMN_DATA_TYPE_MISMATCH (ADVICE r14). Under the
+      // append lock, like every manifest writer: a flush reads the
+      // manifest once and writes its union back under that lock
+      StoreLocks.logsAppend(dir).synchronized {
+        LogStore.overrideManifestStringTypes(dir, promoted)
+      }
       MsgBloom.invalidate(dir)
       // promotion changes the store schema, so the covered-field list is
       // stale too — drop rather than refresh
@@ -314,14 +318,10 @@ object Compaction {
         LogStore.applyPromotion(
           spark.read.schema(schema).parquet(paths: _*), promoted)
       }
-    val __t0 = System.nanoTime()
     // row-group bloom filters for high-cardinality string columns ride
     // the rewrite (LogStore.bloomWriteOptions) — blooms are made at
     // merge time, like the reference's block headers
     val storeRoot = pdir.getParent.getParent.getParent.toString
-    if (sys.env.contains("GRAFT_BLOOM_DEBUG"))
-      System.err.println(s"[compact] storeRoot=$storeRoot opts=" +
-        LogStore.bloomWriteOptions(storeRoot, df.schema))
     df
       .repartition(nOut, col("_stream_id"))
       .sortWithinPartitions(col("_stream_id"), col("_time"))
@@ -329,7 +329,6 @@ object Compaction {
       .option("parquet.block.size", LogStore.ParquetRowGroupBytes)
       .options(LogStore.bloomWriteOptions(storeRoot, df.schema))
       .parquet(tmp.toString)
-    val __t1 = System.nanoTime()
     // exact whole-part value-type verdict, classified on the data being
     // rewritten BEFORE the source files are deleted (`df` still reads
     // them); the background merge is where the reference decides block
@@ -353,9 +352,6 @@ object Compaction {
         // made compaction read every partition 4×
         val (partTypes, fileTypes, fieldHits) =
           ValueTypeMeta.compactionStats(spark.read.parquet(tmp.toString))
-        if (sys.env.contains("GRAFT_COMPACT_DEBUG"))
-          System.err.println(f"[compact] $pdir rewrite=${(__t1 - __t0) / 1e6}%.0fms " +
-            f"stats=${(System.nanoTime() - __t1) / 1e6}%.0fms")
         Some((storeDir, partKey, partTypes, fileTypes, fieldHits))
       } catch { case e: Exception =>
         // metadata is an optimization; on failure value_type falls back to

@@ -119,7 +119,12 @@ object LogStore {
     withMeta
       .repartition(col("tenant"), col("_day"),
         pmod(xxhash64(col("_stream_id")), lit(filesPerDay)))
-      .sortWithinPartitions(col("_stream_id"), col("_time"))
+      // _day leads: the planned write needs rows grouped by partition
+      // column and would otherwise put its own Sort [_day] on top, which
+      // replaces the (_stream_id, _time) order. `tenant` is a visible
+      // constant here, which that check drops from what it requires, so
+      // it must not lead the sort (contrast Ingest.appendBatch)
+      .sortWithinPartitions(col("_day"), col("_stream_id"), col("_time"))
       .write.mode("overwrite")
       .option("compression", LogStore.ParquetCodec)
       .option("parquet.block.size", LogStore.ParquetRowGroupBytes)
@@ -141,7 +146,7 @@ object LogStore {
       overwrite = true)
     // mode=overwrite replaced every file — reset the schema manifest to
     // exactly this load's shape (see recordWrittenSchema)
-    recordWrittenSchema(dir, withMeta.schema, sorted, reset = true)
+    recordWrittenSchema(dir, withMeta.schema, sorted, cur = None)
     invalidate(dir)
   }  // releases StoreLocks.logsAppend(dir)
 
@@ -437,22 +442,26 @@ object LogStore {
   private val manifestSeen =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Union `written` (one writer's data schema) into the manifest.
-    * Callers hold the store's append/compaction lock. First-writer-wins
-    * on a name collision: the manifest records what is physically in the
-    * files, and files are immutable. */
+  /** Union `written` (one writer's data schema) into `cur`, the manifest
+    * as the caller read it under `StoreLocks.logsAppend(dir)` (None: no
+    * manifest, or a reset), and write the result when it changed. Every
+    * manifest writer holds that lock, so `cur` is still current.
+    * First-writer-wins on a name collision: the manifest records what is
+    * physically in the files, and files are immutable. */
   private[graft] def recordWrittenSchema(dir: String, written: StructType,
                                          streamFields: Seq[String],
-                                         reset: Boolean = false): Unit = {
-    val cur = if (reset) None else readSchemaManifest(dir)
+                                         cur: Option[(StructType, Set[String])]): Unit = {
     val (baseSchema, baseSf) = cur.getOrElse((new StructType(), Set.empty[String]))
-    var merged = baseSchema
-    written.fields.foreach(f =>
-      if (!merged.fieldNames.contains(f.name)) merged = merged.add(f))
+    val merged = addMissing(baseSchema, written)
     val sf = baseSf ++ streamFields
     if (cur.isEmpty || merged != baseSchema || sf != baseSf)
       writeSchemaManifest(dir, merged, sf)
   }
+
+  /** `base` plus the fields of `more` whose names it lacks, in order. */
+  private[graft] def addMissing(base: StructType, more: StructType): StructType =
+    more.fields.foldLeft(base)((m, f) =>
+      if (m.fieldNames.contains(f.name)) m else m.add(f))
 
   /** Force manifest entries for `keys` to StringType — called after a
     * promotion MATERIALIZATION physically rewrote every file's promoted
@@ -472,17 +481,19 @@ object LogStore {
     }
   }
 
-  /** Cast `df`'s columns to the store manifest's types where they
-    * differ. Parquet cannot serve two physical types under one column
-    * name across files (PARQUET_COLUMN_DATA_TYPE_MISMATCH — verified,
-    * both readers), so the FIRST writer's physical type is canonical and
+  /** Cast `df`'s columns to the types of `cur`, the store manifest as
+    * read under the append lock, where they differ. Parquet cannot serve
+    * two physical types under one column name across files
+    * (PARQUET_COLUMN_DATA_TYPE_MISMATCH — verified, both readers), so
+    * the FIRST writer's physical type is canonical and
     * later appenders conform their data before writing: string→numeric
     * through try_cast (unparseable → null), numeric→string through the
     * same GoFloat rendering strF uses. Incompatible shapes (map/struct
     * collisions) pass through unchanged — first-writer-wins stands and
     * the conform counter makes the collision observable. */
-  private[graft] def conformToManifest(df: DataFrame, dir: String): DataFrame =
-    readSchemaManifest(dir) match {
+  private[graft] def conformToManifest(
+      df: DataFrame, cur: Option[(StructType, Set[String])]): DataFrame =
+    cur match {
       case None => df
       case Some((manifest, _)) =>
         def scalar(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {

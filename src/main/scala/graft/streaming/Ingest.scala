@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import graft.functions.FlushInstant
 import graft.store.LogStore
 
 /** M6 streaming ingestion: Structured Streaming sources parsed with the
@@ -34,33 +35,24 @@ object Ingest {
     s.split(',').map(_.trim).filter(_.nonEmpty).toSeq
 
   def parseJsonlineMulti(lines: DataFrame, timeFields: Seq[String],
-                         msgFields: Seq[String]): DataFrame = {
+                         msgFields: Seq[String]): DataFrame =
     // reference logjson shape (json_parser.go appendLogFields): nested
     // objects flatten into dot-separated field names, duplicate keys
     // first-wins, arrays keep their raw JSON — the same JsonFlatten
-    // kernel unpack_json uses, so ingest and query agree byte-for-byte
-    val m = graft.functions.JsonFlattenExpr.flattenColStrict(col("value"))
-    // per-row winner key: the first candidate present in the row
-    def winner(keys: Seq[String]): org.apache.spark.sql.Column =
-      keys.foldRight(lit(null).cast(StringType)) { (k, acc) =>
-        when(element_at(m, k).isNotNull, lit(k)).otherwise(acc)
-      }
-    val tKey = winner(timeFields)
-    val mKey = winner(msgFields)
-    lines.filter(m.isNotNull).select(
-      // reference-exact ingest timestamp parse (insertutil.parseTimestamp:
-      // RFC3339Nano incl. SQL datetimes + magnitude-inferred unix values —
-      // try_cast silently dropped unix timestamps to ingestion time);
-      // unparseable values still degrade to now (lenient deviation: the
-      // reference 400s the request)
-      coalesce(graft.functions.GoTime.parseCol(element_at(m, tKey)),
-        current_timestamp()).as("_time"),
-      coalesce(element_at(m, mKey), lit("")).as("_msg"),
-      // null-safe <=>: with no winner (tKey/mKey null) a plain === would
-      // yield null for every key and map_filter would drop the whole map
-      coalesce(map_filter(m, (k, _) => !(k <=> tKey) && !(k <=> mKey)),
-        map().cast(MapType(StringType, StringType))).as("fields"))
-  }
+    // kernel unpack_json uses, so ingest and query agree byte-for-byte.
+    // One parse per line: the generator picks the time/msg keys and
+    // drops malformed lines itself (see JsonLineGen)
+    lines.select(graft.functions.JsonFlattenExpr.jsonLines(
+        col("value"), timeFields, msgFields))
+      .select(
+        // reference-exact ingest timestamp parse (insertutil.parseTimestamp:
+        // RFC3339Nano incl. SQL datetimes + magnitude-inferred unix values —
+        // try_cast silently dropped unix timestamps to ingestion time);
+        // unparseable values still degrade to now (lenient deviation: the
+        // reference 400s the request)
+        coalesce(graft.functions.GoTime.parseCol(col("time")),
+          FlushInstant.now()).as("_time"),
+        col("_msg"), col("fields"))
 
   /** Syslog RFC3164/RFC5424 lines via the unpack_syslog expressions
     * (syslog_parser.go; app/vlinsert/syslog/syslog.go:38-60). */
@@ -72,7 +64,7 @@ object Ingest {
     val f = col("fields")
     unpacked.select(
       coalesce(element_at(f, "timestamp").try_cast("timestamp"),
-        current_timestamp()).as("_time"),
+        FlushInstant.now()).as("_time"),
       coalesce(element_at(f, "message"), lit("")).as("_msg"),
       map_filter(f, (k, _) =>
         k =!= "timestamp" && k =!= "message").as("fields"))
@@ -112,7 +104,7 @@ object Ingest {
         explode(col("s.values")).as("v"))
       .select(
         coalesce(graft.functions.GoTime.parseCol(coalesce(
-          col("v").getItem(0), lit(""))), current_timestamp()).as("_time"),
+          col("v").getItem(0), lit(""))), FlushInstant.now()).as("_time"),
         coalesce(col("v").getItem(1), lit("")).as("_msg"),
         graft.functions.MapOps.concatLastWins(
           col("labels"),
@@ -204,7 +196,7 @@ object Ingest {
         coalesce(
           when(element_at(m, "timestamp").try_cast("long") > 0,
             timestamp_micros(element_at(m, "timestamp").try_cast("long") * 1000L)),
-          current_timestamp()).as("_time"),
+          FlushInstant.now()).as("_time"),
         coalesce(element_at(m, "message.message"),
           element_at(m, "message"), lit("")).as("_msg"),
         graft.functions.MapOps.concatLastWins(
@@ -225,7 +217,7 @@ object Ingest {
     blocks.select(
       coalesce(
         timestamp_micros(element_at(m, "__REALTIME_TIMESTAMP").try_cast("long")),
-        current_timestamp()).as("_time"),
+        FlushInstant.now()).as("_time"),
       coalesce(element_at(m, "MESSAGE"), lit("")).as("_msg"),
       map_filter(m, (k, _) =>
         k =!= "MESSAGE" && k =!= "__REALTIME_TIMESTAMP").as("fields"))
@@ -240,10 +232,6 @@ object Ingest {
     // store every label twice AND double-count it in field_names (the
     // reference stores a stream field once — storage_search_test.go
     // field_names-all pins hits == rows for stream fields)
-    // the labels now live in real columns; keeping the map copy would
-    // store every label twice AND double-count it in field_names (the
-    // reference stores a stream field once — storage_search_test.go
-    // field_names-all pins hits == rows for stream fields)
     if (streamFields.isEmpty) withCols
     else withCols.withColumn("fields",
       map_filter(col("fields"), (k, _) => !k.isin(streamFields: _*)))
@@ -253,18 +241,27 @@ object Ingest {
     * counterpart of LogStore.ingest, mode=append). Rows beyond
     * `maxFutureDays` are dropped (storage.go's maxAllowedDay bound): a
     * corrupt client timestamp must not create stray far-future day
-    * partitions that retention would keep alive for years. */
+    * partitions that retention would keep alive for years.
+    *
+    * `width` is how wide the caller made the batch (GroupCommitter sizes
+    * it by payload bytes). A batch of width 1 — `parsed` in one partition
+    * — is written by its own parse task: one Spark job, no exchange. A
+    * wider batch, or one whose caller did not size it (the default), is
+    * salted across the session's shuffle width. */
   def appendBatch(parsed: DataFrame, dir: String, streamFields: Seq[String],
-                  tenant: String = "0:0", filesPerDay: Int = 4,
+                  tenant: String = "0:0", width: Int = 4,
                   maxFutureDays: Int = 2): Unit = {
     val sorted = streamFields.sorted
+    // one instant for the whole batch, held by reference so the generated
+    // code does not change from flush to flush (see FlushInstant)
+    val now = FlushInstant.now()
     // null _time (missing/unparseable client timestamps — Loki JSON, OTLP
     // JSON) defaults to now, like the reference substitutes the current
     // time for zero timestamps; without the coalesce the bound predicate
     // evaluates to null and silently DROPS those rows
     val bounded = parsed
-      .withColumn("_time", coalesce(col("_time"), current_timestamp()))
-      .filter(col("_time") <= expr(s"current_timestamp() + INTERVAL $maxFutureDays DAYS"))
+      .withColumn("_time", coalesce(col("_time"), now))
+      .filter(col("_time") <= now + expr(s"INTERVAL $maxFutureDays DAYS"))
     val withMeta0 = graft.store.LogStore.applyPromotion(
         promote(bounded, sorted),
         graft.store.LogStore.promotedFields(dir).map(_._1))
@@ -283,14 +280,15 @@ object Ingest {
     // HTTP protocols, this covers cross-path concurrency (syslog TCP/UDP
     // flushers, test backfills) too
     graft.store.StoreLocks.logsAppend(dir).synchronized {
-      // conformToManifest INSIDE the lock: a protocol append onto a bulk
-      // store whose manifest records a colliding column (stream field,
-      // promoted key) under a different physical type must write the
-      // manifest's type — parquet cannot serve two physical types under
-      // one name — and the manifest must not change between the conform
-      // decision and the write (a concurrent bulk overwrite holds this
-      // same lock)
-      val withMeta = graft.store.LogStore.conformToManifest(withMeta0, dir)
+      // the manifest is read ONCE, inside the lock: a protocol append onto
+      // a bulk store whose manifest records a colliding column (stream
+      // field, promoted key) under a different physical type must write
+      // the manifest's type — parquet cannot serve two physical types
+      // under one name — and every manifest writer (this one, the bulk
+      // overwrite, promotion's type override) holds this same lock, so
+      // the copy read here stays current through the union below
+      val manifest = graft.store.LogStore.readSchemaManifest(dir)
+      val withMeta = graft.store.LogStore.conformToManifest(withMeta0, manifest)
       // the /metrics ingested-rows count AND the batch's distinct stream
       // ids ride along as observed metrics instead of costing separate jobs
       val obs = org.apache.spark.sql.Observation()
@@ -299,22 +297,29 @@ object Ingest {
       // which are invalidated after the commit and re-classified exactly
       // by the next compaction of the part (ValueTypeMeta — classifying
       // here cost ~35% of flush throughput, measured)
-      withMeta
+      val observed = withMeta
         .observe(obs, count(lit(1)).as("rows"),
           collect_set(col("_stream_id")).as("sids"),
           graft.store.ValueTypeMeta.partsAgg)
-        // writer width: the encode+zstd stage is the CPU-bound part of a
-        // flush, so salt across the session's shuffle width (≈ cluster
-        // write slots), not filesPerDay — a 4-way salt left 28 of 32
-        // cores idle (measured ~2x slower flushes). filesPerDay remains
-        // the CONSOLIDATED target: background compaction (lifecycle
-        // optimize / force_merge) merges flush files down, the same
-        // small-parts-then-merge shape as the reference's datadb.
-        .repartition(col("tenant"), col("_day"),
-          pmod(xxhash64(col("_stream_id")),
-            lit(math.max(filesPerDay,
-              parsed.sparkSession.sessionState.conf.numShufflePartitions))))
-        .sortWithinPartitions(col("_stream_id"), col("_time"))
+      // writer width: the encode+zstd stage is the CPU-bound part of a
+      // wide flush, so salt it across the session's shuffle width (≈
+      // cluster write slots) — a 4-way salt left 28 of 32 cores idle
+      // (measured ~2x slower flushes). Background compaction (lifecycle
+      // optimize / force_merge) merges flush files down, the same
+      // small-parts-then-merge shape as the reference's datadb.
+      val spread =
+        if (width == 1) observed
+        else observed.repartition(col("tenant"), col("_day"),
+          pmod(xxhash64(col("_stream_id")), lit(math.max(width,
+            parsed.sparkSession.sessionState.conf.numShufflePartitions))))
+      // the partition columns lead the sort: the planned write needs rows
+      // grouped by them and would otherwise put its own Sort [_day] on
+      // top, which replaces the (_stream_id, _time) order. The observe
+      // hides that `tenant` is a constant, so the check requires it too
+      // (contrast LogStore.ingest)
+      spread
+        .sortWithinPartitions(col("tenant"), col("_day"), col("_stream_id"),
+          col("_time"))
         .write.mode("append")
         .option("compression", graft.store.LogStore.ParquetCodec)
         .partitionBy("tenant", "_day")
@@ -334,12 +339,14 @@ object Ingest {
       // failure may fail the FLUSH — the rows are committed either way
       // and the next flush re-attempts the seed.
       try {
-        if (graft.store.LogStore.readSchemaManifest(dir).isEmpty)
-          graft.store.LogStore.recordWrittenSchema(dir,
+        val written =
+          if (manifest.isDefined) withMeta.schema
+          else graft.store.LogStore.addMissing(
             graft.store.LogStore.withStaleRetry(dir)(
               parsed.sparkSession.read.option("mergeSchema", "true")
-                .parquet(s"$dir/logs").schema), sorted)
-        graft.store.LogStore.recordWrittenSchema(dir, withMeta.schema, sorted)
+                .parquet(s"$dir/logs").schema),
+            withMeta.schema)
+        graft.store.LogStore.recordWrittenSchema(dir, written, sorted, manifest)
       } catch { case e: Exception =>
         // counted, not just logged: persistent failure means reads of a
         // mixed store silently fall back to single-footer inference —

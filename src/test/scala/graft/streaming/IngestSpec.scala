@@ -33,6 +33,23 @@ class IngestSpec extends SparkSuite {
     assert(out.length == 2)
   }
 
+  test("jsonline _time_field and _msg_field may name the same key") {
+    // each list picks its first present key on its own; a key picked by
+    // both serves both and leaves the fields once
+    import spark.implicits._
+    val lines = Seq(
+      """{"ts":"2024-01-05T10:00:00Z","app":"web"}""",
+      """{"at":"2024-01-06T10:00:00Z","ts":"2024-01-07T10:00:00Z","app":"api"}""")
+      .toDF("value")
+    val out = Ingest.parseJsonline(lines, "at,ts", "ts").collect()
+      .map(r => (r.getAs[java.sql.Timestamp]("_time").toInstant.toString,
+        r.getAs[String]("_msg"), r.getAs[Map[String, String]]("fields")))
+      .sortBy(_._1).toSeq
+    assert(out == Seq(
+      ("2024-01-05T10:00:00Z", "2024-01-05T10:00:00Z", Map("app" -> "web")),
+      ("2024-01-06T10:00:00Z", "2024-01-07T10:00:00Z", Map("app" -> "api"))), out)
+  }
+
   test("jsonline ingest flattens nested objects into dot-path fields") {
     // json_parser.go appendLogFields: {"k8s":{"pod":{"name":"x"}}} is
     // stored as the single field k8s.pod.name=x; arrays keep raw JSON
