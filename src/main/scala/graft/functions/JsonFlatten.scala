@@ -45,17 +45,7 @@ case class JsonFlattenExpr(child: Expression,
       if (nullForNonObject) return null
       pairs = new java.util.LinkedHashMap[String, String]()
     }
-    val keys = new Array[Any](pairs.size)
-    val vals = new Array[Any](pairs.size)
-    var idx = 0
-    val it = pairs.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      keys(idx) = UTF8String.fromString(e.getKey)
-      vals(idx) = UTF8String.fromString(e.getValue)
-      idx += 1
-    }
-    ArrayBasedMapData(keys, vals)
+    JsonFlattenExpr.toMapData(pairs)
   }
 
   override protected def withNewChildInternal(c: Expression): JsonFlattenExpr =
@@ -96,26 +86,17 @@ case class JsonLineGen(child: Expression, timeKeys: Seq[String],
     if (s == null) return Nil
     val pairs = JsonFlattenExpr.flatten(s.toString)
     if (pairs == null) return Nil
-    val tKey = timeKeys.find(pairs.containsKey).orNull
-    val mKey = msgKeys.find(pairs.containsKey).orNull
-    val n = pairs.size - (if (tKey != null) 1 else 0) -
-      (if (mKey != null && mKey != tKey) 1 else 0)
-    val keys = new Array[Any](n)
-    val vals = new Array[Any](n)
-    var idx = 0
-    val it = pairs.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey != tKey && e.getKey != mKey) {
-        keys(idx) = UTF8String.fromString(e.getKey)
-        vals(idx) = UTF8String.fromString(e.getValue)
-        idx += 1
-      }
-    }
+    // the values are read before either key is dropped: both lists may
+    // name the same key
+    val tKey = timeKeys.find(pairs.containsKey)
+    val mKey = msgKeys.find(pairs.containsKey)
+    val time = tKey.map(pairs.get).orNull
+    val msg = mKey.map(pairs.get).getOrElse("")
+    tKey.foreach(pairs.remove)
+    mKey.foreach(pairs.remove)
     Iterator.single(InternalRow(
-      if (tKey == null) null else UTF8String.fromString(pairs.get(tKey)),
-      UTF8String.fromString(if (mKey == null) "" else pairs.get(mKey)),
-      ArrayBasedMapData(keys, vals)))
+      if (time == null) null else UTF8String.fromString(time),
+      UTF8String.fromString(msg), JsonFlattenExpr.toMapData(pairs)))
   }
 
   override protected def withNewChildInternal(c: Expression): JsonLineGen =
@@ -129,6 +110,21 @@ object JsonFlattenExpr {
     val f = new JsonFactory()
     f.enable(JsonParser.Feature.ALLOW_NON_NUMERIC_NUMBERS)
     f
+  }
+
+  /** `pairs` as Spark map data, in insertion order. */
+  def toMapData(pairs: java.util.LinkedHashMap[String, String]): ArrayBasedMapData = {
+    val keys = new Array[Any](pairs.size)
+    val vals = new Array[Any](pairs.size)
+    var idx = 0
+    val it = pairs.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      keys(idx) = UTF8String.fromString(e.getKey)
+      vals(idx) = UTF8String.fromString(e.getValue)
+      idx += 1
+    }
+    ArrayBasedMapData(keys, vals)
   }
 
   /** Returns insertion-ordered flattened pairs, or null when `s` is not

@@ -26,11 +26,11 @@ import graft.streaming.Ingest
   * by reference (FlushInstant) rather than inlined as a literal, so a
   * steady-state flush reuses the compiled classes of the previous one.
   *
-  * Each batch is sized once, by payload bytes (a one-line Loki/OTLP body
-  * can be large): up to [[GroupCommitter.SliceBytes]] it is one slice,
-  * parsed and written by a single task with no exchange; a bigger batch
-  * parses in one slice per SliceBytes and is salted across the writers
-  * (see [[Ingest.appendBatch]]'s `width`).
+  * Each batch is sized once, by payload characters rather than lines (a
+  * one-line Loki/OTLP body can be large), into parse slices
+  * ([[GroupCommitter.slices]]). A batch of one slice is parsed and
+  * written by a single task with no exchange; a batch of several is
+  * salted across the writers (see [[Ingest.appendBatch]]'s `salt`).
   *
   * Completing the future only after the append keeps read-your-writes: a
   * 200 response still means the rows are queryable, exactly like the
@@ -51,19 +51,37 @@ object GroupCommitter {
                                  streamFields: Seq[String], tenant: String,
                                  done: CompletableFuture[Unit])
 
-  /** Payload bytes per parse slice. About 2k typical jsonline rows: below
-    * it a flush costs less in one task than in a shuffle job. */
-  val SliceBytes: Long = 512L << 10
+  /** Payload characters per parse slice (bytes, for ASCII payloads).
+    * Set from one-off flush timings on 4 cores, one task with no exchange
+    * against the salted exchange (1 MiB slices), medians of 10 warm
+    * flushes: jsonline 1 MiB 371 vs 337 ms, 2 MiB 350 vs 371 ms, 4 MiB
+    * 522 vs 492 ms, 8 MiB 822 vs 538 ms; eight Loki bodies 0.55 MiB 255
+    * vs 273 ms, 1.1 MiB 333 vs 298 ms, 2.2 MiB 439 vs 409 ms, 4.1 MiB
+    * 667 vs 459 ms. Up to 1 MiB one task is as fast; from 1 to 2 MiB the
+    * two are within the spread of the runs; above that the salted write
+    * wins. */
+  val SliceChars: Long = 1L << 20
 
-  /** Slices for a batch of `bytes` payload bytes, at most 32. */
-  def width(bytes: Long): Int =
-    math.min(32L, math.max(1L, bytes / SliceBytes)).toInt
+  /** Parse slices for a batch of `lines` payload lines holding `chars`
+    * characters: one per started SliceChars, at most 32, and at most one
+    * per line. A line is parsed by one task whatever its size, and for
+    * a single Loki body the exchange saved nothing (1 MiB 287 vs 305 ms,
+    * 4.1 MiB 656 vs 706 ms, one task first), so a one-line batch is
+    * always one slice. */
+  def slices(chars: Long, lines: Int): Int =
+    math.min(32L, math.min(lines.toLong,
+      math.max(1L, (chars + SliceChars - 1) / SliceChars))).toInt
 
-  private def bytes(p: Payload): Long = p match {
+  private def chars(p: Payload): Long = p match {
     case Lines(ls) => ls.iterator.map(_.length.toLong + 1).sum
     case Rows(rs) => rs.iterator.map { case (_, m, f) =>
       16L + m.length + f.iterator.map { case (k, v) => k.length + v.length + 2L }.sum
     }.sum
+  }
+
+  private def size(p: Payload): Int = p match {
+    case Lines(ls) => ls.size
+    case Rows(rs) => rs.size
   }
 }
 
@@ -81,32 +99,33 @@ final class GroupCommitter(spark: SparkSession, storeDir: String,
   def enqueued: Long = enqueuedCount.get
   def flushes: Long = flushCount.get
 
-  private def linesDF(lines: Seq[String], width: Int): DataFrame = {
+  private def linesDF(lines: Seq[String], slices: Int): DataFrame = {
     import spark.implicits._
-    spark.createDataset(spark.sparkContext.parallelize(lines,
-      math.max(1, math.min(width, lines.size)))).toDF("value")
+    spark.createDataset(spark.sparkContext.parallelize(lines, slices)).toDF("value")
   }
 
   private def rowsDF(
       rows: Seq[(java.sql.Timestamp, String, Map[String, String])],
-      width: Int): DataFrame = {
+      slices: Int): DataFrame = {
     import spark.implicits._
-    spark.createDataset(spark.sparkContext.parallelize(rows,
-      math.max(1, math.min(width, rows.size)))).toDF("_time", "_msg", "fields")
+    spark.createDataset(spark.sparkContext.parallelize(rows, slices))
+      .toDF("_time", "_msg", "fields")
   }
 
-  /** The batch of `ps` as one DataFrame, and its width. */
-  private def merged(ps: Seq[Payload]): (DataFrame, Int) = {
-    val w = GroupCommitter.width(ps.iterator.map(GroupCommitter.bytes).sum)
+  /** The batch of `ps` as one DataFrame, and whether its write is salted
+    * (it is not for a batch parsed in one slice). */
+  private def merged(ps: Seq[Payload]): (DataFrame, Boolean) = {
+    val n = GroupCommitter.slices(ps.iterator.map(GroupCommitter.chars).sum,
+      ps.iterator.map(GroupCommitter.size).sum)
     ps match {
       case many if many.forall(_.isInstanceOf[Lines]) =>
-        (linesDF(many.flatMap(_.asInstanceOf[Lines].lines), w), w)
+        (linesDF(many.flatMap(_.asInstanceOf[Lines].lines), n), n > 1)
       case many if many.forall(_.isInstanceOf[Rows]) =>
-        (rowsDF(many.flatMap(_.asInstanceOf[Rows].rows), w), w)
+        (rowsDF(many.flatMap(_.asInstanceOf[Rows].rows), n), n > 1)
       case many => // mixed kinds under one key can't happen from IngestServer,
         // but merge defensively via union of built frames — a union spans
-        // a partition per part, so it is never a one-task batch
-        (many.map(p => merged(Seq(p))._1).reduce(_.unionByName(_)), math.max(2, w))
+        // a partition per part, so it is always salted
+        (many.map(p => merged(Seq(p))._1).reduce(_.unionByName(_)), true)
     }
   }
 
@@ -158,9 +177,9 @@ final class GroupCommitter(spark: SparkSession, storeDir: String,
             try {
               // identical key ⇒ identical build fn; parse the concatenated
               // payload once through the first entry's builder
-              val (df, width) = merged(group.map(_.payload))
+              val (df, salt) = merged(group.map(_.payload))
               Ingest.appendBatch(group.head.build(df), storeDir, fields, tenant,
-                width)
+                salt)
               flushCount.incrementAndGet()
               Metrics.ingestCommits.incrementAndGet()
               group.foreach(_.done.complete(()))
@@ -170,9 +189,9 @@ final class GroupCommitter(spark: SparkSession, storeDir: String,
                 // to per-entry appends so only the offender 400s
                 group.foreach { e =>
                   try {
-                    val (df, width) = merged(Seq(e.payload))
+                    val (df, salt) = merged(Seq(e.payload))
                     Ingest.appendBatch(e.build(df), storeDir, fields, tenant,
-                      width)
+                      salt)
                     flushCount.incrementAndGet()
                     Metrics.ingestCommits.incrementAndGet()
                     e.done.complete(())

@@ -99,9 +99,14 @@ object Ingest {
     payloads
       .select(explode(from_json(col("value"), schema).getField("streams")).as("s"))
       // duplicate label keys inside one stream object: dedup first-wins
-      // so the stored fields map never poisons later map rebuilds
+      // so the stored fields map never poisons later map rebuilds. The
+      // labels are taken BEFORE the values explode: computed beside the
+      // explode, they keep the whole stream `s` in every exploded row,
+      // and copying it out per row made a one-stream body quadratic
+      // (4000 values did not fit a 1 GiB heap)
       .select(graft.functions.MapOps.dedupKeysFirst(col("s.stream")).as("labels"),
-        explode(col("s.values")).as("v"))
+        col("s.values").as("values"))
+      .select(col("labels"), explode(col("values")).as("v"))
       .select(
         coalesce(graft.functions.GoTime.parseCol(coalesce(
           col("v").getItem(0), lit(""))), FlushInstant.now()).as("_time"),
@@ -243,13 +248,12 @@ object Ingest {
     * corrupt client timestamp must not create stray far-future day
     * partitions that retention would keep alive for years.
     *
-    * `width` is how wide the caller made the batch (GroupCommitter sizes
-    * it by payload bytes). A batch of width 1 — `parsed` in one partition
-    * — is written by its own parse task: one Spark job, no exchange. A
-    * wider batch, or one whose caller did not size it (the default), is
-    * salted across the session's shuffle width. */
+    * By default the rows are salted across the session's shuffle width
+    * before the write. With `salt = false` each partition of `parsed` is
+    * written by the task that parsed it: one Spark job, no exchange
+    * (GroupCommitter does this for a batch it parses in one slice). */
   def appendBatch(parsed: DataFrame, dir: String, streamFields: Seq[String],
-                  tenant: String = "0:0", width: Int = 4,
+                  tenant: String = "0:0", salt: Boolean = true,
                   maxFutureDays: Int = 2): Unit = {
     val sorted = streamFields.sorted
     // one instant for the whole batch, held by reference so the generated
@@ -308,9 +312,9 @@ object Ingest {
       // optimize / force_merge) merges flush files down, the same
       // small-parts-then-merge shape as the reference's datadb.
       val spread =
-        if (width == 1) observed
+        if (!salt) observed
         else observed.repartition(col("tenant"), col("_day"),
-          pmod(xxhash64(col("_stream_id")), lit(math.max(width,
+          pmod(xxhash64(col("_stream_id")), lit(math.max(4,
             parsed.sparkSession.sessionState.conf.numShufflePartitions))))
       // the partition columns lead the sort: the planned write needs rows
       // grouped by them and would otherwise put its own Sort [_day] on

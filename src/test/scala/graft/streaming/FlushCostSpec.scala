@@ -153,15 +153,39 @@ class FlushCostSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       // wide enough for several slices: ~3 MB of lines
       val pad = "x" * 1000
       val wide = jsonLines(3000, 5).map(_.replace("\"level\"", s"\"pad\":\"$pad\",\"level\""))
-      assert(GroupCommitter.width(wide.map(_.length + 1L).sum) > 1)
+      assert(GroupCommitter.slices(wide.map(_.length + 1L).sum, wide.size) > 1)
       val (big, _) = traced {
         gc.append(GroupCommitter.Lines(wide), "k", Ingest.parseJsonline(_),
           Fields, "0:0")
       }
       assert(exchanges(big.head).nonEmpty, big.head.executedPlan.toString)
+      // one body larger than a slice is still parsed by one task, so it
+      // is not salted either
+      val n = (GroupCommitter.SliceChars / 100).toInt
+      val values = (0 until n).map(i =>
+        s"""["${1704412800000000000L + i * 1000000L}","${"v" * 100} $i"]""")
+      val body = s"""{"streams":[{"stream":{"app":"a1","host":"h1"},""" +
+        s""""values":[${values.mkString(",")}]}]}"""
+      assert(body.length > GroupCommitter.SliceChars)
+      assert(GroupCommitter.slices(body.length + 1L, 1) == 1)
+      val (loki, _) = traced {
+        gc.append(GroupCommitter.Lines(Seq(body)), "loki",
+          Ingest.parseLokiJson(_), Fields, "0:0")
+      }
+      assert(exchanges(loki.head).isEmpty, loki.head.executedPlan.toString)
       assert(graft.logql.Compiler.run(graft.store.LogStore.read(spark, dir),
-        "* | stats count() c").collect().head.getLong(0) == 35 + 300 + 3000)
+        "* | stats count() c").collect().head.getLong(0) ==
+        35 + 300 + 3000 + n)
     } finally gc.close()
+  }
+
+  test("a batch parses in one slice per started SliceChars, one per line at most") {
+    import GroupCommitter.{SliceChars, slices}
+    assert(slices(1, 1) == 1)
+    assert(slices(SliceChars, 100000) == 1)
+    assert(slices(SliceChars + 1, 100000) == 2)
+    assert(slices(3 * SliceChars, 2) == 2)
+    assert(slices(100 * SliceChars, 100000) == 32)
   }
 
   /** (_stream_id, _time micros) of every row, per data file, in file order. */
@@ -188,7 +212,8 @@ class FlushCostSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   test("every file a flush writes is sorted by (_stream_id, _time)") {
     val lines = jsonLines(400, 6)
     val one = tmp("sorted-one")
-    Ingest.appendBatch(Ingest.parseJsonline(linesDf(lines)), one, Fields, "0:0", 1)
+    Ingest.appendBatch(Ingest.parseJsonline(linesDf(lines)), one, Fields,
+      salt = false)
     assertSorted(one)
     val salted = tmp("sorted-salted")
     Ingest.appendBatch(Ingest.parseJsonline(linesDf(lines)), salted, Fields)
