@@ -69,8 +69,8 @@ object GroupCommitter {
     * 4.1 MiB 656 vs 706 ms, one task first), so a one-line batch is
     * always one slice. */
   def slices(chars: Long, lines: Int): Int =
-    math.min(32L, math.min(lines.toLong,
-      math.max(1L, (chars + SliceChars - 1) / SliceChars))).toInt
+    math.min(32L, math.max(1L,
+      math.min(lines.toLong, (chars + SliceChars - 1) / SliceChars))).toInt
 
   private def chars(p: Payload): Long = p match {
     case Lines(ls) => ls.iterator.map(_.length.toLong + 1).sum

@@ -181,6 +181,7 @@ class FlushCostSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   test("a batch parses in one slice per started SliceChars, one per line at most") {
     import GroupCommitter.{SliceChars, slices}
+    assert(slices(0, 0) == 1)
     assert(slices(1, 1) == 1)
     assert(slices(SliceChars, 100000) == 1)
     assert(slices(SliceChars + 1, 100000) == 2)
